@@ -244,4 +244,27 @@ class MaintenanceLeaseSpec extends SparkSpec {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(!served.contains(2L) && served.nonEmpty)
   }
+
+  test("renewing a lease replaces the file atomically: a polling reader " +
+      "never finds it missing") {
+    val dir = java.nio.file.Files.createTempDirectory("lease_renew").toString
+    val p = new org.apache.hadoop.fs.Path(dir, MaintenanceLease.LeaseFile)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    var lease = MaintenanceLease.acquire(spark, dir, "renewer")
+    @volatile var renewing = true
+    val polls = new java.util.concurrent.atomic.AtomicLong
+    val misses = new java.util.concurrent.atomic.AtomicLong
+    val reader = new Thread(() =>
+      while (renewing) {
+        if (!fs.exists(p)) misses.incrementAndGet()
+        polls.incrementAndGet()
+      })
+    reader.start()
+    try (1 to 2000).foreach(_ => lease = MaintenanceLease.renew(spark, lease))
+    finally { renewing = false; reader.join() }
+    assert(misses.get == 0, s"${misses.get} of ${polls.get} polls found no lease")
+    assert(polls.get >= 2000, s"the reader polled only ${polls.get} times")
+    MaintenanceLease.release(spark, lease)
+    assert(!fs.exists(p))
+  }
 }
