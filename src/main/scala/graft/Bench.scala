@@ -203,6 +203,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
+    // the run's drift key beside sf: partial-aggregation and shuffle
+    // record counts depend on the partition count, so plan/job maps
+    // are only comparable at the same (sf, cpus)
+    val cpus = GraftSession.cpus
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     warmup(spark, sfDir)
 
@@ -388,15 +393,25 @@ object Bench {
     // volume trips here even with an identical returned plan. Jobs/
     // stages/bytes are recorded unGATED (bytes hang on codec framing;
     // job and stage counts can move with benign AQE re-staging —
-    // records are the semantic signal).
+    // records are the semantic signal). Keyed on (sf, cpus): a map
+    // taken at another core count is not compared, with a note on
+    // stderr. A map that records no cpus predates the field and was
+    // taken at the default core count.
     val planDrift: Seq[String] = {
       val prev = java.nio.file.Paths.get("BENCH_LOCAL.json")
       if (!java.nio.file.Files.exists(prev)) Nil
       else try {
         val root = new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree(prev.toFile)
-        if (root.path("sf").asText() != sfDir || !root.has("plan")) Nil
-        else {
+        val (mapSf, mapCpus) = (root.path("sf").asText(),
+          root.path("cpus").asInt(GraftSession.DefaultCpus))
+        if (!root.has("plan")) Nil
+        else if (mapSf != sfDir || mapCpus != cpus) {
+          System.err.println(
+            s"[bench] plan-drift compare skipped: the committed map is at " +
+              s"sf=$mapSf cpus=$mapCpus, this run at sf=$sfDir cpus=$cpus")
+          Nil
+        } else {
           val old = root.path("plan")
           val oldJob = root.path("job") // may be missing on older maps
           registry.map(_.name).filter(old.has).flatMap { name =>
@@ -427,7 +442,8 @@ object Bench {
     val diagPath = java.nio.file.Paths.get("target", "bench_diag.json")
     java.nio.file.Files.createDirectories(diagPath.getParent)
     java.nio.file.Files.writeString(diagPath,
-      s"""{"full_names":$qsFull,""" +
+      s"""{"cpus":$cpus,"shuffle_partitions":$shufflePartitions,""" +
+        s""""full_names":$qsFull,""" +
         s""""median_total":$medTotal,"medians":$medMap,""" +
         s""""npass":$nPass,"plan":$planMap,"job":$jobMap,""" +
         s""""plan_drift":${planDrift.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
@@ -464,7 +480,9 @@ object Bench {
     if (registry.size == SparkEntry.registry.size) {
       val localPath = java.nio.file.Paths.get("BENCH_LOCAL.json")
       java.nio.file.Files.writeString(localPath,
-        s"""{"sf":"$sfDir","npass":$nPass,"stat":"min",""" +
+        s"""{"sf":"$sfDir","cpus":$cpus,""" +
+          s""""shuffle_partitions":$shufflePartitions,""" +
+          s""""npass":$nPass,"stat":"min",""" +
           s""""total":$total,"median_total":$medTotal,""" +
           s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
           s""""plan_drift":${planDrift.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +

@@ -23,7 +23,10 @@ import org.apache.spark.sql.SparkSession
   *    same files with the same `.crc` and checkpoint checksums.
   */
 object GraftSession {
-  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  /** Core count when `SPARK_GRAFT_CPUS` is unset. */
+  val DefaultCpus = 32
+
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus.toString).toInt
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession

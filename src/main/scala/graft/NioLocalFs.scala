@@ -6,8 +6,8 @@ import java.nio.file.{Files, LinkOption, NoSuchFileException, StandardCopyOption
 import java.nio.file.attribute.{FileTime, PosixFilePermissions, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -61,8 +61,18 @@ object NioRawLocalFileSystem {
 }
 
 /** `fs.file.impl`: Hadoop's checksummed `LocalFileSystem` (`.crc`
-  * sidecars written and verified) over [[NioRawLocalFileSystem]]. */
-class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+  * sidecars written and verified) over [[NioRawLocalFileSystem]]. A
+  * checksum failure still fails the read, but the file stays where it
+  * is: the stock `reportChecksumFailure` moves it and its sidecar into
+  * a `bad_files` directory at the top of the mount, so a reader racing
+  * a checksummed rename (data renamed, `.crc` not yet) would make a
+  * live file vanish — for a lease file, letting appenders in during
+  * maintenance. */
+class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
+  override def reportChecksumFailure(
+      p: Path, in: FSDataInputStream, inPos: Long,
+      sums: FSDataInputStream, sumsPos: Long): Boolean = false
+}
 
 /** `fs.AbstractFileSystem.file.impl`: Hadoop's FileContext `LocalFs`
   * (a `ChecksumFs`) with the raw layer swapped for [[NioRawLocalFs]]. */

@@ -1721,12 +1721,12 @@ object ExtendedQueries {
         val pth = new org.apache.hadoop.fs.Path(idx)
         val fs = pth.getFileSystem(spark.sessionState.newHadoopConf())
         if (fs.exists(pth)) fs.delete(pth, true)
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 4 === 1), "vec_id", "embedding", idx, 1L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec}
 
 /** Embedding similarity + multimodal plumbing verification.
   *
@@ -58,7 +58,7 @@ object SimilarityQueries {
 
   /** Shared DuckDB CTE block for the STORE-served filtered pair
     * (q265/q266): centroids trained on the SEED half (vec_id even —
-    * what seedIndex pinned), distances over the full admitted corpus,
+    * what seed pinned), distances over the full admitted corpus,
     * the predicate-filtered cells + counts, each query's ranked cell
     * list, and the probed prefix under `probeCond` (a fixed rank cut
     * for q265, the 20-candidate floor for q266). */
@@ -212,7 +212,7 @@ object SimilarityQueries {
         WHERE rank <= 3 ORDER BY query_id, rank"""
 
   /** Shared by q90 (inline multi-probe IVF-SQ8) and q100 (the same
-    * ranking served from writeIvfSq8Index's stored artifacts) — one
+    * ranking served from writeIvfIndex's stored SQ8 artifacts) — one
     * definition so the grid, probe list, and integer distance can never
     * drift between the inline and served forms. */
   private val ivfSq8MultiprobeOracle: String = """
@@ -476,9 +476,9 @@ object SimilarityQueries {
     GraftQuery(
       "q97_ann_flat_from_index",
       "IVF-Flat served from a WRITTEN index (the uncompressed sibling " +
-        "of q89): writeIvfFlatIndex materializes full-precision vectors " +
+        "of q89): writeIvfIndex (Flat) materializes full-precision vectors " +
         "one dir per coarse cell plus the stored centroids, then " +
-        "ivfFlatTopKFromIndex answers q51's exact ranking reading ONLY " +
+        "topKFromIndex answers q51's exact ranking reading ONLY " +
         "the probed cell dirs (static partition pruning, plan-asserted " +
         "in spec) with exact in-cell cosine. Shares q51's oracle SQL " +
         "verbatim.",
@@ -486,10 +486,9 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q97_index")
-        graft.sinks.CorpusSink.writeIvfFlatIndex(
+        graft.sinks.CorpusSink.writeIvfIndex(
           e, "vec_id", "embedding", idx, nLists = 8)
-        Similarity.ivfFlatTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, nProbe = 1)
+        Similarity.topKFromIndex(spark, idx, q, "vec_id", "embedding", k = 3, nProbe = 1)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(ivfFlatOracle)),
@@ -929,9 +928,9 @@ object SimilarityQueries {
 
     GraftQuery(
       "q89_ann_from_index",
-      "ANN served from a WRITTEN index: writeIvfPqIndex materializes " +
+      "ANN served from a WRITTEN index: writeIvfIndex (PQ) materializes " +
         "codes (one dir per coarse cell) + centroids/codebook/ranges, " +
-        "then ivfPqTopKFromIndex answers q77's exact ranking from the " +
+        "then topKFromIndex answers q77's exact ranking from the " +
         "stored artifacts alone — corpus vectors never re-read, probed " +
         "cell dirs pruned statically (plan-asserted in spec). Shares " +
         "q77's oracle SQL verbatim; integer (dist, id) ranking, " +
@@ -942,10 +941,11 @@ object SimilarityQueries {
         // fixed scratch path: repeated verify/bench runs overwrite one
         // index instead of accumulating temp dirs
         val idx = QueryScratch.dir("graft_q89_index")
-        graft.sinks.CorpusSink.writeIvfPqIndex(
-          e, "vec_id", "embedding", idx, nLists = 8, m = 8, dim = 64, kCent = 16)
-        Similarity.ivfPqTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, m = 8, dim = 64, nProbe = 1)
+        graft.sinks.CorpusSink.writeIvfIndex(
+          e, "vec_id", "embedding", idx,
+          VectorCodec.Pq(m = 8, dim = 64, kCent = 16), nLists = 8)
+        Similarity.topKFromIndex(spark, idx, q, "vec_id", "embedding", k = 3,
+            codec = VectorCodec.Pq(m = 8, dim = 64), nProbe = 1)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(ivfPqOracle)),
@@ -964,12 +964,13 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q98_index")
-        graft.sinks.CorpusSink.writeIvfPqIndex(
-          e, "vec_id", "embedding", idx, nLists = 8, m = 8, dim = 64, kCent = 16)
+        graft.sinks.CorpusSink.writeIvfIndex(
+          e, "vec_id", "embedding", idx,
+          VectorCodec.Pq(m = 8, dim = 64, kCent = 16), nLists = 8)
         Similarity.recallReport(
             Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 3),
-            Similarity.ivfPqTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-              k = 3, m = 8, dim = 64, nProbe = 2))
+            Similarity.topKFromIndex(spark, idx, q, "vec_id", "embedding", k = 3,
+                codec = VectorCodec.Pq(m = 8, dim = 64), nProbe = 2))
           .orderBy(col("query_id"))
       },
       Some("""
@@ -1066,9 +1067,9 @@ object SimilarityQueries {
       "q100_ann_sq8_from_index",
       "IVF-SQ8 served from a WRITTEN index — the middle point of the " +
         "serving matrix (Flat q97 = exact vectors; SQ8 = 8-bit codes, " +
-        "4x smaller scan; PQ q89 = m bytes): writeIvfSq8Index stores " +
+        "4x smaller scan; PQ q89 = m bytes): writeIvfIndex (SQ8) stores " +
         "each vector quantized once under the global grid, one dir per " +
-        "coarse cell; ivfSq8TopKFromIndex quantizes the QUERY under the " +
+        "coarse cell; topKFromIndex quantizes the QUERY under the " +
         "stored grid and integer-L2 ranks only the probed cell dirs " +
         "(static partition pruning, plan-asserted in spec) at nProbe=2. " +
         "Shares q90's oracle SQL verbatim — served == inline by " +
@@ -1077,10 +1078,10 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q100_index")
-        graft.sinks.CorpusSink.writeIvfSq8Index(
-          e, "vec_id", "embedding", idx, nLists = 8, dim = 64)
-        Similarity.ivfSq8TopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, dim = 64, nProbe = 2)
+        graft.sinks.CorpusSink.writeIvfIndex(
+          e, "vec_id", "embedding", idx, VectorCodec.Sq8(dim = 64), nLists = 8)
+        Similarity.topKFromIndex(spark, idx, q, "vec_id", "embedding", k = 3,
+            codec = VectorCodec.Sq8(dim = 64), nProbe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(ivfSq8MultiprobeOracle)),
@@ -1100,11 +1101,11 @@ object SimilarityQueries {
       (spark, dir) => {
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q101_index")
-        graft.streaming.VectorIndexStream.seedIndex(
+        graft.streaming.VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-        graft.streaming.VectorIndexStream.appendBatch(
+        graft.streaming.VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        graft.streaming.VectorIndexStream.topKFromIndex(
+        graft.streaming.VectorIndexStream.topK(
             spark, idx, e.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", k = 3)
           .orderBy(col("query_id"), col("rank"))
@@ -1156,7 +1157,7 @@ object SimilarityQueries {
       (spark, dir) => {
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q105_index")
-        graft.streaming.VectorIndexStream.seedIndex(
+        graft.streaming.VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
         graft.streaming.SemanticDedupStream.dedupBatch(
             e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx,
@@ -1208,11 +1209,12 @@ object SimilarityQueries {
       (spark, dir) => {
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q106_index")
-        graft.streaming.VectorIndexStream.seedSq8Index(
-          e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-        graft.streaming.VectorIndexStream.appendSq8Batch(
+        graft.streaming.VectorIndexStream.seed(
+          e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+          codec = VectorCodec.Sq8(), nLists = 8)
+        graft.streaming.VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        graft.streaming.VectorIndexStream.sq8TopKFromIndex(
+        graft.streaming.VectorIndexStream.topK(
             spark, idx, e.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", k = 3)
           .orderBy(col("query_id"), col("rank"))
@@ -1275,12 +1277,13 @@ object SimilarityQueries {
       (spark, dir) => {
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q107_index")
-        graft.streaming.VectorIndexStream.seedPqIndex(
+        graft.streaming.VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        graft.streaming.VectorIndexStream.appendPqBatch(
+          codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+          nLists = 8)
+        graft.streaming.VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        graft.streaming.VectorIndexStream.pqTopKFromIndex(
+        graft.streaming.VectorIndexStream.topK(
             spark, idx, e.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", k = 3)
           .orderBy(col("query_id"), col("rank"))
@@ -1328,13 +1331,13 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q109_index")
-        graft.streaming.VectorIndexStream.seedIndex(
+        graft.streaming.VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-        graft.streaming.VectorIndexStream.appendBatch(
+        graft.streaming.VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
         Similarity.recallReport(
             Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 3),
-            graft.streaming.VectorIndexStream.topKFromIndex(
+            graft.streaming.VectorIndexStream.topK(
               spark, idx, q, "vec_id", "embedding", k = 3, nProbe = 2))
           .orderBy(col("query_id"))
       },
@@ -1525,14 +1528,14 @@ object SimilarityQueries {
         val odd = e.filter(col("vec_id") % 2 === 1)
         val pqIdx = QueryScratch.dir("graft_q123_pq_index")
         val vecsIdx = QueryScratch.dir("graft_q123_vecs_index")
-        graft.streaming.VectorIndexStream.seedPqIndex(
-          even, "vec_id", "embedding", pqIdx, nLists = 8, m = 8,
-          dim = 64, kCent = 16)
-        graft.streaming.VectorIndexStream.appendPqBatch(
+        graft.streaming.VectorIndexStream.seed(
+          even, "vec_id", "embedding", pqIdx,
+          codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16), nLists = 8)
+        graft.streaming.VectorIndexStream.append(
           odd, "vec_id", "embedding", pqIdx, 0L)
-        graft.streaming.VectorIndexStream.seedIndex(
+        graft.streaming.VectorIndexStream.seed(
           even, "vec_id", "embedding", vecsIdx, nLists = 8)
-        graft.streaming.VectorIndexStream.appendBatch(
+        graft.streaming.VectorIndexStream.append(
           odd, "vec_id", "embedding", vecsIdx, 0L)
         graft.streaming.VectorIndexStream.pqRefinedTopKFromIndex(
             spark, pqIdx, vecsIdx, q, "vec_id", "embedding",
@@ -1924,14 +1927,14 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q249_index")
-        VectorIndexStream.seedIndex(e, "vec_id", "embedding", idx, nLists = 8)
+        VectorIndexStream.seed(e, "vec_id", "embedding", idx, nLists = 8)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 0L)
-        Similarity.ivfFlatTopKFromIndex(spark, idx, q, "vec_id", "embedding",
+        Similarity.topKFromIndex(spark, idx, q, "vec_id", "embedding",
             k = 3, nProbe = 1,
-            excludeIds = Some(
-              VectorIndexStream.deadIds(spark, idx, "vec_id")))
+            filter = VectorCodec.ProbeFilter(excludeIds = Some(
+              VectorIndexStream.deadIds(spark, idx, "vec_id"))))
           .orderBy(col("query_id"), col("rank"))
       },
       Some("""
@@ -2131,16 +2134,15 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q265_index")
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.filteredTopKFromIndex(spark, idx, q,
-            "vec_id", "embedding",
-            allowedIds = e.filter(col("label").isin(2, 4, 6))
-              .select(col("vec_id")),
-            k = 3, nProbe = 2)
+        VectorIndexStream.topK(spark, idx, q,
+            "vec_id", "embedding", k = 3, nProbe = 2,
+            filter = VectorCodec.ProbeFilter(allowedIds = Some(
+              e.filter(col("label").isin(2, 4, 6)).select(col("vec_id")))))
           .orderBy(col("query_id"), col("rank"))
       },
       Some(s"""
@@ -2162,15 +2164,16 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q266_index")
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.filteredTopKFromIndex(spark, idx, q,
-            "vec_id", "embedding",
-            allowedIds = e.filter(col("label") === 4).select(col("vec_id")),
-            k = 3, minCandidates = 20L)
+        VectorIndexStream.topK(spark, idx, q,
+            "vec_id", "embedding", k = 3,
+            filter = VectorCodec.ProbeFilter(
+              allowedIds = Some(e.filter(col("label") === 4).select(col("vec_id"))),
+              minCandidates = 20L))
           .orderBy(col("query_id"), col("rank"))
       },
       Some(s"""
@@ -2195,20 +2198,20 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q267_index")
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 1L)
-        VectorIndexStream.filteredTopKFromIndex(spark, idx, q,
-            "vec_id", "embedding",
-            allowedIds = e.filter(col("label").isin(2, 4, 6))
-              .select(col("vec_id")),
-            k = 3, nProbe = 2,
-            excludeIds = Some(VectorIndexStream.deadIds(spark, idx, "vec_id")))
+        VectorIndexStream.topK(spark, idx, q,
+            "vec_id", "embedding", k = 3, nProbe = 2,
+            filter = VectorCodec.ProbeFilter(
+              allowedIds = Some(
+                e.filter(col("label").isin(2, 4, 6)).select(col("vec_id"))),
+              excludeIds = Some(VectorIndexStream.deadIds(spark, idx, "vec_id"))))
           .orderBy(col("query_id"), col("rank"))
       },
       Some(s"""
@@ -2231,13 +2234,12 @@ object SimilarityQueries {
         val e = Tables.table(spark, dir, "embeddings")
         val q = e.filter(col("vec_id") % 50 === 0)
         val idx = QueryScratch.dir("graft_q251_index")
-        VectorIndexStream.seedIndex(e, "vec_id", "embedding", idx, nLists = 8)
+        VectorIndexStream.seed(e, "vec_id", "embedding", idx, nLists = 8)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 0L)
         VectorIndexStream.purgeTombstones(spark, idx, "vec_id")
-        Similarity.ivfFlatTopKFromIndex(spark, idx, q, "vec_id", "embedding",
-            k = 3, nProbe = 1)
+        Similarity.topKFromIndex(spark, idx, q, "vec_id", "embedding", k = 3, nProbe = 1)
           .orderBy(col("query_id"), col("rank"))
       },
       Some("""
@@ -2291,7 +2293,7 @@ object SimilarityQueries {
         import graft.streaming.VectorIndexStream
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q271_index")
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
         VectorIndexStream.deleteBatch(spark, idx,
@@ -2350,20 +2352,22 @@ object SimilarityQueries {
         import graft.streaming.VectorIndexStream
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q272_index")
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+          codec = VectorCodec.Sq8(),
           nLists = 8)
-        VectorIndexStream.appendSq8Batch(
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
           "vec_id", batchId = 1L)
-        VectorIndexStream.sq8FilteredTopKFromIndex(spark, idx,
-            e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-            allowedIds = e.filter(col("label").isin(2, 4, 6))
-              .select(col("vec_id")),
-            k = 3, nProbe = 2,
-            excludeIds = Some(VectorIndexStream.deadIds(spark, idx, "vec_id")))
+        VectorIndexStream.topK(spark, idx,
+            e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", k = 3,
+            nProbe = 2,
+            filter = VectorCodec.ProbeFilter(
+              allowedIds = Some(
+                e.filter(col("label").isin(2, 4, 6)).select(col("vec_id"))),
+              excludeIds = Some(VectorIndexStream.deadIds(spark, idx, "vec_id"))))
           .orderBy(col("query_id"), col("rank"))
       },
       Some("""
@@ -2435,15 +2439,17 @@ object SimilarityQueries {
         import graft.streaming.VectorIndexStream
         val e = Tables.table(spark, dir, "embeddings")
         val idx = QueryScratch.dir("graft_q273_index")
-        VectorIndexStream.seedPqIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        VectorIndexStream.appendPqBatch(
+          codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+          nLists = 8)
+        VectorIndexStream.append(
           e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.pqFilteredTopKFromIndex(spark, idx,
-            e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-            allowedIds = e.filter(col("label") === 4).select(col("vec_id")),
-            k = 3, minCandidates = 20L)
+        VectorIndexStream.topK(spark, idx,
+            e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", k = 3,
+            filter = VectorCodec.ProbeFilter(
+              allowedIds = Some(e.filter(col("label") === 4).select(col("vec_id"))),
+              minCandidates = 20L))
           .orderBy(col("query_id"), col("rank"))
       },
       Some("""
@@ -2509,11 +2515,11 @@ object SimilarityQueries {
         val fs = pth.getFileSystem(spark.sessionState.newHadoopConf())
         if (fs.exists(pth)) fs.delete(pth, true)
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(
           odds.withColumn("embedding",
             transform(col("embedding"), x => abs(x))),
           "vec_id", "embedding", idx, 1L)
@@ -2589,11 +2595,12 @@ object SimilarityQueries {
         val fs = pth.getFileSystem(spark.sessionState.newHadoopConf())
         if (fs.exists(pth)) fs.delete(pth, true)
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+          codec = VectorCodec.Sq8(),
           nLists = 8)
-        VectorIndexStream.appendSq8Batch(odds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendSq8Batch(
+        VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(
           odds.withColumn("embedding",
             transform(col("embedding"), x => x + x)),
           "vec_id", "embedding", idx, 1L)
@@ -2676,20 +2683,20 @@ object SimilarityQueries {
           if (fs.exists(p)) fs.delete(p, true)
         }
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendBatch(
+        VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(
           odds.withColumn("embedding",
             transform(col("embedding"), x => abs(x))),
           "vec_id", "embedding", idx, 1L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 2L)
-        VectorIndexStream.rebuildIndex(
+        VectorIndexStream.rebuild(
           spark, idx, idx2, "vec_id", "embedding", nLists = 8)
-        VectorIndexStream.topKFromIndex(
+        VectorIndexStream.topK(
             spark, idx2, e.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", k = 3)
           .orderBy(col("query_id"), col("rank"))
@@ -2742,12 +2749,12 @@ object SimilarityQueries {
     GraftQuery(
       "q279_store_cutover",
       "Atomic serving CUTOVER through a store alias (StorePointer, " +
-        "served via topKFromAlias — no call site holds a raw path) — " +
+        "served via StorePointer.resolve — no call site holds a raw path) — " +
         "how a re-trained store goes live without a request seeing a " +
         "half-state: the incrementally-grown store (even seed, odd " +
         "batch 0 — q101's exact build, so its quantizer is pinned on " +
         "HALF the corpus it now serves) publishes as pointer v1, " +
-        "rebuildIndex retrains on the full live corpus into a fresh " +
+        "rebuild retrains on the full live corpus into a fresh " +
         "store that publishes as v2, and serving resolves by PATH — " +
         "the live read serves the retrained quantizer (q51's " +
         "full-corpus centroid set) while the PINNED v1 read, resolved " +
@@ -2767,19 +2774,20 @@ object SimilarityQueries {
           if (fs.exists(p)) fs.delete(p, true)
         }
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
         StorePointer.publish(spark, alias, idx)
-        VectorIndexStream.rebuildIndex(
+        VectorIndexStream.rebuild(
           spark, idx, idx2, "vec_id", "embedding", nLists = 8)
         StorePointer.publish(spark, alias, idx2)
         // ALIAS-ROUTED serving: the call sites hold only the alias —
         // never a raw store path that could go stale across a cutover
         def serve(ver: Option[Long], tag: Long) =
-          VectorIndexStream.topKFromAlias(
-              spark, alias, q, "vec_id", "embedding", k = 3, version = ver)
+          VectorIndexStream.topK(
+              spark, StorePointer.resolve(spark, alias, ver), q, "vec_id", "embedding",
+              k = 3)
             .withColumn("ptr_version", lit(tag))
         serve(Some(1L), 1L)
           .unionByName(serve(None, 2L))
@@ -2854,7 +2862,7 @@ object SimilarityQueries {
         "acts): the drifted SQ8 store — grid pinned on the even half, " +
         "batch 0 appends the odd half DOUBLED (q277's escape fixture, " +
         "boundary share ~20-90x the seed's) plus a takedown batch — " +
-        "is rebuilt via rebuildSq8Index, which re-ingests the live " +
+        "is rebuilt via rebuild, which re-ingests the live " +
         "ids' FULL-PRECISION vectors from the SOURCE corpus (codes " +
         "cannot retrain their own grid; decode-re-encode would bake " +
         "the old grid's error in) and retrains centroids AND ranges " +
@@ -2877,10 +2885,11 @@ object SimilarityQueries {
         }
         val doubled = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => x + x))
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+          codec = VectorCodec.Sq8(),
           nLists = 8)
-        VectorIndexStream.appendSq8Batch(doubled, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(doubled, "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 1L)
@@ -2890,10 +2899,11 @@ object SimilarityQueries {
         val source = e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding"))
           .unionByName(doubled.select(col("vec_id"), col("embedding")))
-        VectorIndexStream.rebuildSq8Index(
-          spark, idx, idx2, source, "vec_id", "embedding", nLists = 8)
+        VectorIndexStream.rebuild(
+          spark, idx, idx2, "vec_id", "embedding", codec = VectorCodec.Sq8(),
+          nLists = 8, sourceCorpus = Some(source))
         // the drifted distribution re-encoded under the retrained grid
-        VectorIndexStream.appendSq8Batch(
+        VectorIndexStream.append(
           source.filter(col("vec_id") % 10 =!= 5),
           "vec_id", "embedding", idx2, 0L)
         VectorIndexStream.sq8BoundaryReport(spark, idx2)
@@ -2942,9 +2952,9 @@ object SimilarityQueries {
       "q281_alias_served_sq8_rebuild",
       "The rebuild->cutover->serve flow END TO END through the alias " +
         "(q280's rebuild + q279's pointer, served by " +
-        "sq8TopKFromAlias): the drifted SQ8 store (even-half grid, " +
+        "StorePointer.resolve): the drifted SQ8 store (even-half grid, " +
         "doubled odd batch, %10=5 takedowns) publishes as pointer v1, " +
-        "rebuildSq8Index re-ingests the source corpus into a fresh " +
+        "rebuild re-ingests the source corpus into a fresh " +
         "store that publishes as v2, and BOTH generations serve " +
         "through the alias — the pinned v1 read still ranks the old " +
         "grid's saturated codes (takedowns un-excluded: plain serve), " +
@@ -2969,10 +2979,11 @@ object SimilarityQueries {
         }
         val doubled = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => x + x))
-        VectorIndexStream.seedSq8Index(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+          codec = VectorCodec.Sq8(),
           nLists = 8)
-        VectorIndexStream.appendSq8Batch(doubled, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(doubled, "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 1L)
@@ -2980,12 +2991,14 @@ object SimilarityQueries {
         val source = e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding"))
           .unionByName(doubled.select(col("vec_id"), col("embedding")))
-        VectorIndexStream.rebuildSq8Index(
-          spark, idx, idx2, source, "vec_id", "embedding", nLists = 8)
+        VectorIndexStream.rebuild(
+          spark, idx, idx2, "vec_id", "embedding", codec = VectorCodec.Sq8(),
+          nLists = 8, sourceCorpus = Some(source))
         StorePointer.publish(spark, alias, idx2)
         def serve(ver: Option[Long], tag: Long) =
-          VectorIndexStream.sq8TopKFromAlias(
-              spark, alias, q, "vec_id", "embedding", k = 3, version = ver)
+          VectorIndexStream.topK(
+              spark, StorePointer.resolve(spark, alias, ver), q, "vec_id", "embedding",
+              k = 3)
             .withColumn("ptr_version", lit(tag))
         serve(Some(1L), 1L).unionByName(serve(None, 2L))
           .select(col("ptr_version"), col("query_id"), col("rank"),
@@ -3102,10 +3115,10 @@ object SimilarityQueries {
         "covers the full compression matrix: the drifted PQ store " +
         "(grid + codebook + centroids all pinned on the even half, " +
         "doubled odd batch saturating the grid, %10=5 takedowns) " +
-        "publishes as pointer v1; rebuildPqIndex re-ingests the " +
+        "publishes as pointer v1; rebuild re-ingests the " +
         "source corpus, retrains ALL THREE artifacts on the live " +
         "corpus, and publishes as v2; both generations serve through " +
-        "pqTopKFromAlias — m=8 code bytes per candidate either way, " +
+        "StorePointer.resolve — m=8 code bytes per candidate either way, " +
         "but v2's codebook spans the distribution the store actually " +
         "holds. Integer ADC distances and integer code argmins (ties " +
         "to the lower codebook index) — hash-exact; cell-assignment " +
@@ -3127,10 +3140,11 @@ object SimilarityQueries {
         }
         val doubled = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => x + x))
-        VectorIndexStream.seedPqIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        VectorIndexStream.appendPqBatch(doubled, "vec_id", "embedding", idx, 0L)
+          codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+          nLists = 8)
+        VectorIndexStream.append(doubled, "vec_id", "embedding", idx, 0L)
         VectorIndexStream.deleteBatch(spark, idx,
           e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
           "vec_id", batchId = 1L)
@@ -3138,13 +3152,15 @@ object SimilarityQueries {
         val source = e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding"))
           .unionByName(doubled.select(col("vec_id"), col("embedding")))
-        VectorIndexStream.rebuildPqIndex(
-          spark, idx, idx2, source, "vec_id", "embedding",
-          nLists = 8, m = 8, dim = 64, kCent = 16)
+        VectorIndexStream.rebuild(
+          spark, idx, idx2, "vec_id", "embedding",
+          codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+          nLists = 8, sourceCorpus = Some(source))
         StorePointer.publish(spark, alias, idx2)
         def serve(ver: Option[Long], tag: Long) =
-          VectorIndexStream.pqTopKFromAlias(
-              spark, alias, q, "vec_id", "embedding", k = 3, version = ver)
+          VectorIndexStream.topK(
+              spark, StorePointer.resolve(spark, alias, ver), q, "vec_id", "embedding",
+              k = 3)
             .withColumn("ptr_version", lit(tag))
         serve(Some(1L), 1L).unionByName(serve(None, 2L))
           .select(col("ptr_version"), col("query_id"), col("rank"),
@@ -3326,7 +3342,7 @@ object SimilarityQueries {
           if (fs.exists(p)) fs.delete(p, true)
         }
         stores.zipWithIndex.foreach { case (s, m) =>
-          VectorIndexStream.seedIndex(
+          VectorIndexStream.seed(
             e.filter(col("vec_id") % 3 === m), "vec_id", "embedding", s,
             nLists = 8)
         }
@@ -3390,11 +3406,12 @@ object SimilarityQueries {
         val fs = pth.getFileSystem(spark.sessionState.newHadoopConf())
         if (fs.exists(pth)) fs.delete(pth, true)
         val odds = e.filter(col("vec_id") % 2 === 1)
-        VectorIndexStream.seedPqIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-          nLists = 8, m = 8, dim = 64, kCent = 16)
-        VectorIndexStream.appendPqBatch(odds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.appendPqBatch(
+          codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+          nLists = 8)
+        VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.append(
           odds.withColumn("embedding",
             transform(col("embedding"), _ => lit(0.0f))),
           "vec_id", "embedding", idx, 1L)
@@ -3478,7 +3495,7 @@ object SimilarityQueries {
         "(evens original + odd half abs-folded into one orthant), two " +
         "quantizers — the drifted store's centroids were pinned on " +
         "the even half before the fold, the rebuilt store's " +
-        "(rebuildIndex) are retrained on the live corpus — probed at " +
+        "(rebuild) are retrained on the live corpus — probed at " +
         "EQUAL nProbe=1 against the same brute-force top-3, recall " +
         "summed as integers. The store contents are IDENTICAL, so the " +
         "hit-count gap isolates the quantizer: the rebuilt store is " +
@@ -3500,11 +3517,11 @@ object SimilarityQueries {
         }
         val absOdds = e.filter(col("vec_id") % 2 === 1)
           .withColumn("embedding", transform(col("embedding"), x => abs(x)))
-        VectorIndexStream.seedIndex(
+        VectorIndexStream.seed(
           e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
           nLists = 8)
-        VectorIndexStream.appendBatch(absOdds, "vec_id", "embedding", idx, 0L)
-        VectorIndexStream.rebuildIndex(
+        VectorIndexStream.append(absOdds, "vec_id", "embedding", idx, 0L)
+        VectorIndexStream.rebuild(
           spark, idx, idx2, "vec_id", "embedding", nLists = 8)
         val q = e.filter(col("vec_id") % 50 === 0)
         val live = e.filter(col("vec_id") % 2 === 0)
@@ -3514,7 +3531,7 @@ object SimilarityQueries {
           live, q, "vec_id", "embedding", k = 3)
         def gain(store: String, tag: String) =
           Similarity.recallReport(exact,
-              VectorIndexStream.topKFromIndex(
+              VectorIndexStream.topK(
                 spark, store, q, "vec_id", "embedding", k = 3))
             .agg(count(lit(1)).as("n_queries"),
               sum(col("n_exact")).cast("long").as("n_exact"),

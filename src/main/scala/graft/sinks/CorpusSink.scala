@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.similarity.{Similarity, VectorCodec}
+
 /** Write-time layout for corpus tables (the sink half of the 100 TB
   * story): how survivors of the cleaning/curation passes should land
   * on storage so DOWNSTREAM reads prune instead of scan.
@@ -118,12 +120,15 @@ object CorpusSink {
   def writePqIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
       m: Int = 8, dim: Int = 64, kCent: Int = 16): Unit = {
-    import graft.similarity.Similarity
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    val codebook = Similarity.pqCodebook(corpus, idCol, vecCol, m, dim, kCent, mns, mxs)
-    packedCodes(corpus, idCol, vecCol, codebook, m, dim, mns, mxs)
+    // the codec's own training (grid + codebook, written and cached);
+    // no coarse quantizer: this layout is scanned whole
+    val (fit, artifacts) = VectorCodec.Pq(m, dim, kCent).train(corpus, vecCol,
+      path, Similarity.centroidSample(corpus, idCol, vecCol, kCent))
+    VectorCodec.writeArtifacts(path, artifacts)
+    // one row per id, the m codes a single-pass codegen column
+    corpus.groupBy(col(idCol)).agg(first(col(vecCol)).as(vecCol))
+      .select(col(idCol), fit.encoded(vecCol))
       .write.mode(SaveMode.Overwrite).parquet(s"$path/codes")
-    writePqArtifacts(corpus, path, codebook, mns, mxs)
   }
 
   /** PQ + refine serving layout — Faiss's `IndexRefineFlat` persisted:
@@ -145,196 +150,35 @@ object CorpusSink {
       .write.mode(SaveMode.Overwrite).parquet(s"$path/vecs")
   }
 
-  /** IVF-PQ serving layout — [[writePqIndex]] composed with the IVF
-    * cell partitioner, the materialized form of
-    * [[graft.similarity.Similarity.ivfPqTopK]]:
+  /** IVF serving layout under a [[graft.similarity.VectorCodec]] — the
+    * materialized form of the inline IVF operators, one directory per
+    * coarse cell so a probe reads exactly its nProbe cell directories
+    * (partition pruning instead of a corpus scan):
     *
-    *   `path/codes/cell=N` — per-vector PQ codes, one DIRECTORY per
-    *                         coarse cell, so a probe reads exactly its
-    *                         nProbe cell dirs (partition pruning) and
-    *                         only m code bytes per candidate;
+    *   `path/cells/cell=N` — the codec's payload per vector: full-
+    *                         precision vectors (Flat, exact in-cell
+    *                         cosine) or `qv` 8-bit codes (SQ8, 4x
+    *                         smaller scan); PQ keeps its m code bytes
+    *                         per vector (32x) under `path/codes/cell=N`;
     *   `path/centroids`    — (cent_id, cent_vec), the coarse quantizer;
-    *   `path/codebook` / `path/ranges` — as [[writePqIndex]].
+    *   `path/ranges`       — (i, mn, mx), the SQ8 grid (SQ8, PQ);
+    *   `path/codebook`     — (s, j, sub_vec, qsub), m x kCent rows (PQ);
+    *   `path/meta`         — (nLists, codec parameters) header: the
+    *                         stored artifacts are meaningless under
+    *                         other quantization parameters, so a probe
+    *                         validates against it.
     *
-    * [[graft.similarity.Similarity.ivfPqTopKFromIndex]] answers top-k
-    * from this layout alone — the corpus vectors are never read again. */
-  def writeIvfPqIndex(
+    * One md5-ranked sample pass serves the coarse centroids and PQ's
+    * codebook sample, and the payload rides the cell assignment's own
+    * per-id exchange as a single codegen column — one corpus pass.
+    * [[graft.similarity.Similarity.topKFromIndex]] answers top-k from
+    * this layout alone. */
+  def writeIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nLists: Int = 8, m: Int = 8, dim: Int = 64, kCent: Int = 16): Unit = {
-    import graft.similarity.Similarity
-    val spark = corpus.sparkSession
-    // ONE md5-ranked sample pass serves the coarse centroids AND the
-    // codebook sample (shared (md5(id), id) order — prefix equality);
-    // the write used to pay three corpus sample passes (assign's
-    // centroid pick, the centroid artifact, the codebook pick)
-    val sample = Similarity.centroidSample(
-      corpus, idCol, vecCol, math.max(nLists, kCent))
-    val cent = sample.centFrame(spark, nLists)
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    val codebook = Similarity.pqCodebookFromSample(
-      spark, sample.floatVecs(kCent), m, dim, mns, mxs)
-    val cb = Similarity.collectedCodebook(codebook, m)
-    // codes ride the cell assignment's own per-id exchange as a
-    // single-pass codegen column — the separate encode pipeline and
-    // its join back on the id are gone (one corpus pass, not two)
-    Similarity.assignWith(
-        cent, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol),
-        Similarity.pqCodesColumn(
-          graft.functions.Sq8Quantize.sq8Quantize(col(vecCol), mns, mxs),
-          cb, dim).as("codes"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/codes")
-    cent.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    primeLocal(cent, s"$path/centroids")
-    writePqArtifacts(corpus, path, codebook, mns, mxs)
-    // index version header: the stored artifacts are meaningless under
-    // different quantization parameters, so a probe validates against
-    // this instead of trusting its caller
-    import spark.implicits._
-    val meta = graft.streaming.StoreLayout.stamp(
-      Seq((nLists.toLong, m.toLong, dim.toLong, kCent.toLong))
-        .toDF("nLists", "m", "dim", "kCent"))
-    meta.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    primeLocal(meta, s"$path/meta")
+      codec: VectorCodec = VectorCodec.Flat, nLists: Int = 8): Unit = {
+    val (cent, fit) = VectorCodec.seedArtifacts(
+      codec, corpus, idCol, vecCol, path, nLists)
+    VectorCodec.writeCells(cent, fit, corpus.select(col(idCol), col(vecCol)),
+      idCol, vecCol, s"$path/${codec.writtenDir}")
   }
-
-  /** IVF-Flat serving layout — the uncompressed sibling of
-    * [[writeIvfPqIndex]]: full-precision vectors one directory per
-    * coarse cell (`path/cells/cell=N`) plus the stored coarse
-    * quantizer (`path/centroids`) and a `meta` header. A probe
-    * ([[graft.similarity.Similarity.ivfFlatTopKFromIndex]]) assigns its
-    * queries against the stored centroids and reads exactly its nProbe
-    * cell directories — partition pruning instead of a corpus scan,
-    * with exact in-cell cosine (no quantization error), the right
-    * serving point when recall matters more than scan bytes. */
-  def writeIvfFlatIndex(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nLists: Int = 8): Unit = {
-    import graft.similarity.Similarity
-    val spark = corpus.sparkSession
-    // one centroid sample pass shared by the assignment and the
-    // centroid artifact (the write used to pay it twice)
-    val sample = Similarity.centroidSample(corpus, idCol, vecCol, nLists)
-    val cent = sample.centFrame(spark, nLists)
-    Similarity.assignWith(
-        cent, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol), col("cell"), col(vecCol))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
-    cent.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    primeLocal(cent, s"$path/centroids")
-    import spark.implicits._
-    val meta = graft.streaming.StoreLayout.stamp(
-      Seq(Tuple1(nLists.toLong)).toDF("nLists"))
-    meta.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    primeLocal(meta, s"$path/meta")
-  }
-
-  /** IVF-SQ8 serving layout — the middle point of the serving matrix
-    * (IVF-Flat `writeIvfFlatIndex` = exact vectors, 1x; this = 8-bit
-    * codes, 4x smaller scan, no codebook approximation beyond the
-    * per-dimension grid; IVF-PQ `writeIvfPqIndex` = m code bytes, 32x):
-    *
-    *   `path/cells/cell=N` — (id, qv array<long>): each vector
-    *                         quantized ONCE at write time under the
-    *                         global per-dimension SQ8 grid, one
-    *                         directory per coarse cell;
-    *   `path/centroids`    — the coarse quantizer (float, exact);
-    *   `path/ranges`       — (i, mn, mx), the grid the stored codes
-    *                         are meaningless without;
-    *   `path/meta`         — (nLists, dim) version header.
-    *
-    * [[graft.similarity.Similarity.ivfSq8TopKFromIndex]] answers top-k
-    * from these artifacts alone: quantize the QUERY under the stored
-    * grid, integer-L2 against the stored codes of the probed cell
-    * directories — identical ranking to the inline fused-kernel
-    * [[graft.similarity.Similarity.ivfSq8TopK]] by construction (the
-    * fused kernel quantizes both sides under the same grid). */
-  def writeIvfSq8Index(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      nLists: Int = 8, dim: Int = 64): Unit = {
-    import graft.similarity.Similarity
-    val spark = corpus.sparkSession
-    // one centroid sample pass shared by the assignment and the
-    // centroid artifact (the write used to pay it twice)
-    val sample = Similarity.centroidSample(corpus, idCol, vecCol, nLists)
-    val cent = sample.centFrame(spark, nLists)
-    val (mns, mxs) = Similarity.sq8Ranges(corpus, vecCol)
-    Similarity.assignWith(
-        cent, corpus.select(col(idCol), col(vecCol)), idCol, vecCol)
-      .select(col(idCol),
-        graft.functions.Sq8Quantize.sq8Quantize(
-          col(vecCol).cast("array<float>"), mns, mxs).as("qv"),
-        col("cell"))
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
-    cent.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    primeLocal(cent, s"$path/centroids")
-    import spark.implicits._
-    val ranges = mns.indices.map(i => (i.toLong, mns(i), mxs(i)))
-      .toDF("i", "mn", "mx")
-    ranges.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/ranges")
-    primeLocal(ranges, s"$path/ranges")
-    val meta = graft.streaming.StoreLayout.stamp(
-      Seq((nLists.toLong, dim.toLong)).toDF("nLists", "dim"))
-    meta.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    primeLocal(meta, s"$path/meta")
-  }
-
-  /** One row per vector with its m codes packed into an array — the
-    * stored form both PQ layouts share. The encode is a single-pass
-    * codegen column ([[graft.similarity.Similarity.pqCodesColumn]],
-    * same argmin and tie-break as the explode-join encode) over the
-    * per-id dedup exchange, so the corpus reaches the writer in one
-    * pass instead of paying the m-way explode plus two
-    * re-aggregation shuffles. */
-  private def packedCodes(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: DataFrame, m: Int, dim: Int,
-      mns: Seq[Double], mxs: Seq[Double]): DataFrame = {
-    import graft.similarity.Similarity
-    val cb = Similarity.collectedCodebook(codebook, m)
-    corpus.groupBy(col(idCol)).agg(first(col(vecCol)).as(vecCol))
-      .select(col(idCol),
-        Similarity.pqCodesColumn(
-          graft.functions.Sq8Quantize.sq8Quantize(col(vecCol), mns, mxs),
-          cb, dim).as("codes"))
-  }
-
-  private def writePqArtifacts(
-      corpus: DataFrame, path: String, codebook: DataFrame,
-      mns: Seq[Double], mxs: Seq[Double]): Unit = {
-    val spark = corpus.sparkSession
-    codebook.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/codebook")
-    primeLocal(codebook, s"$path/codebook")
-    import spark.implicits._
-    val ranges = mns.indices.map(i => (i.toLong, mns(i), mxs(i)))
-      .toDF("i", "mn", "mx")
-    ranges.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/ranges")
-    primeLocal(ranges, s"$path/ranges")
-  }
-
-  /** Prime [[graft.streaming.ArtifactCache]] from a frame that is
-    * already local (collect() on a LocalRelation runs no Spark job) —
-    * write-then-probe queries skip the cold artifact load. */
-  private def primeLocal(df: DataFrame, dir: String): Unit =
-    graft.streaming.ArtifactCache.prime(
-      df.sparkSession, dir, df.schema, df.collect())
 }

@@ -61,19 +61,36 @@ private[graft] object MaintenanceLease {
     * and treating it as expired would let an appender slip through
     * during the exact stage-and-swap window the lease freezes.
     * Appenders refusing transiently just replay their batch; a
-    * PERSISTENTLY torn file is operator territory ([[break]]). */
+    * PERSISTENTLY torn file is operator territory ([[break]]).
+    *
+    * The read is checksum-verified, and a renewal replaces the data
+    * file and its `.crc` sidecar in two renames, so a read racing one
+    * can pair the new data with the old checksum until the second
+    * rename lands. That mismatch is retried with a doubling backoff
+    * (1 ms, then 2, 4, ... — ~0.25 s in all, which outlasts a renewer
+    * paused between its two renames); a mismatch that persists is real
+    * corruption and is rethrown. */
   private def readLease(fs: FileSystem, p: Path): Option[(String, Long)] =
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      text.split(" ") match {
+      def text(attempt: Int): String =
+        try {
+          val in = fs.open(p)
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+          finally in.close()
+        } catch {
+          case _: org.apache.hadoop.fs.ChecksumException
+              if attempt < ChecksumAttempts =>
+            Thread.sleep(1L << (attempt - 1))
+            text(attempt + 1)
+        }
+      text(1).split(" ") match {
         case Array(h, e) if e.toLongOption.isDefined => Some((h, e.toLong))
         case _ => Some(("<corrupt>", Long.MaxValue))
       }
     }
+
+  private val ChecksumAttempts = 9
 
   private def write(fs: FileSystem, p: Path, holder: String,
       expiresAt: Long): Unit = {

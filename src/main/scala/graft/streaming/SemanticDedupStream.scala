@@ -22,8 +22,7 @@ import graft.similarity.Similarity
   * q51's centroids. The FLAT store specifically: the exact-cosine
   * verify needs full-precision vectors, so the SQ8/PQ cell variants
   * (which store codes) cannot back this operator — seed with
-  * [[VectorIndexStream.seedIndex]], not the quantized seeds. Per
-  * micro-batch:
+  * [[VectorIndexStream.seed]] under the Flat codec. Per micro-batch:
   *
   *  1. assign the batch against the STORED centroids (the pinned
   *     quantizer — assigning against per-batch centroids would make
@@ -39,7 +38,7 @@ import graft.similarity.Similarity
   *     side first, so a takedown-then-repost admits instead of being
   *     suppressed by the document it replaces;
   *  4. survivors emit and land in the batch's own cell partitions
-  *     ([[VectorIndexStream.appendBatch]]).
+  *     ([[VectorIndexStream.append]]).
   *
   * Scale shape: within-batch groups are batch-sized; the cross-batch
   * join is bounded by |batch-cell members| x |stored cell members|,
@@ -135,8 +134,8 @@ object SemanticDedupStream {
 
   /** Streaming writer: `emit` sees each batch's survivors, then their
     * vectors land in the batch's own cell partitions — the store stays
-    * probe-servable by [[VectorIndexStream.topKFromIndex]] throughout.
-    * Seed the store first with [[VectorIndexStream.seedIndex]] over the
+    * probe-servable by [[VectorIndexStream.topK]] throughout.
+    * Seed the store first with [[VectorIndexStream.seed]] over the
     * already-admitted corpus. Start with `.start()`. */
   def dedupStreamToIndex(
       docs: DataFrame, idCol: String, vecCol: String,
@@ -153,7 +152,7 @@ object SemanticDedupStream {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           emit(fresh, batchId)
-          VectorIndexStream.appendBatch(fresh, idCol, vecCol, indexDir, batchId)
+          VectorIndexStream.append(fresh, idCol, vecCol, indexDir, batchId)
         } finally {
           fresh.unpersist()
           core.cleanup()

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Atomic serving CUTOVER for rebuilt stores — the last piece of the
-  * quantizer re-train loop ([[VectorIndexStream.rebuildIndex]] writes
+  * quantizer re-train loop ([[VectorIndexStream.rebuild]] writes
   * the fresh store; this is how serving starts reading it without a
   * single request seeing a half-state). Cell ids are never comparable
   * across quantizers, so a rebuild can never patch a store in place —
@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * immutable once renamed, so a reader that just resolved v=N keeps a
   * consistent view no matter how many cutovers land after it.
   *
-  * [[resolveVersion]] pins a PAST generation — "what store served
+  * [[resolve]] with a version pins a PAST generation — "what store served
   * requests before the re-train?" — refusing unknown/retired versions
   * loudly, the same as-of contract every store here gives. Retiring a
   * pointer never deletes the store it names (stores answer as-of
@@ -88,26 +88,28 @@ object StorePointer {
       v
     }
 
-  /** The store serving NOW (highest pointer version): one listing,
-    * one read. */
-  def resolve(spark: SparkSession, aliasDir: String): String = {
+  /** The store an alias serves: the live one (highest pointer
+    * version) by default, or the one that served at pointer version
+    * `v` — the pinned read. One listing, one read; a retired or
+    * never-published version refuses loudly naming what IS retained.
+    * Serving call sites resolve per request and probe the returned
+    * directory, so none holds a raw path across a cutover. */
+  def resolve(
+      spark: SparkSession, aliasDir: String,
+      version: Option[Long] = None): String = {
     val vs = listVersions(spark, aliasDir)
-    require(vs.nonEmpty,
-      s"alias at $aliasDir holds no pointers — publish a store first")
-    readPointer(spark, aliasDir, vs.last)
-  }
-
-  /** The store that served at pointer version `v` — the pinned read
-    * (one listing, one read); a retired or never-published version
-    * refuses loudly naming what IS retained. */
-  def resolveVersion(
-      spark: SparkSession, aliasDir: String, v: Long): String = {
-    val vs = listVersions(spark, aliasDir)
-    if (!vs.contains(v)) throw new IllegalStateException(
-      s"alias at $aliasDir does not retain pointer version $v " +
-        s"(retained: ${vs.mkString(", ")}) — retired pointers are gone " +
-        "by design; the stores they named live until their own " +
-        "retention retires them")
+    val v = version match {
+      case Some(v) if !vs.contains(v) => throw new IllegalStateException(
+        s"alias at $aliasDir does not retain pointer version $v " +
+          s"(retained: ${vs.mkString(", ")}) — retired pointers are gone " +
+          "by design; the stores they named live until their own " +
+          "retention retires them")
+      case Some(v) => v
+      case None =>
+        require(vs.nonEmpty,
+          s"alias at $aliasDir holds no pointers — publish a store first")
+        vs.last
+    }
     readPointer(spark, aliasDir, v)
   }
 

@@ -216,12 +216,12 @@ class MaintenanceLeaseSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("lease_vec").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
 
     val lease = MaintenanceLease.acquire(spark, idx, "vec-maintenance")
     val append = intercept[IllegalStateException] {
-      VectorIndexStream.appendBatch(
+      VectorIndexStream.append(
         e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
     }
     assert(append.getMessage.contains("under maintenance"), append.getMessage)
@@ -234,7 +234,7 @@ class MaintenanceLeaseSpec extends SparkSpec {
 
     // cleared: both land, and maintenance's own acquire/release cycle
     // (purge) leaves no lease behind
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
     VectorIndexStream.deleteBatch(
       spark, idx, Seq(2L).toDF("vec_id"), "vec_id", batchId = 1L)
@@ -259,11 +259,41 @@ class MaintenanceLeaseSpec extends SparkSpec {
         if (!fs.exists(p)) misses.incrementAndGet()
         polls.incrementAndGet()
       })
+    // a second poller reads the lease the way every appender does: each
+    // read is checksum-verified while renewals rename data and `.crc`
+    val refusals = new java.util.concurrent.atomic.AtomicLong
+    val otherErrors = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new Thread(() =>
+      while (renewing) {
+        try {
+          MaintenanceLease.refuseIfHeld(spark, dir, "append during renewal")
+          otherErrors.add("no refusal")
+        } catch {
+          case e: IllegalStateException
+              if e.getMessage.contains("under maintenance by 'renewer'") =>
+            refusals.incrementAndGet()
+          case e: Throwable => otherErrors.add(e.toString)
+        }
+      })
+    // a checksum failure on the stock local filesystem moves the file
+    // into `bad_files` at the top of the mount: watch every ancestor
+    val ancestors = Iterator.iterate(new java.io.File(dir).getCanonicalFile)(
+      _.getParentFile).takeWhile(_ != null).toSeq
+    def badFiles(): Seq[String] = ancestors
+      .map(a => new java.io.File(a, "bad_files")).filter(_.exists)
+      .flatMap(b => b.getPath +: Option(b.list()).toSeq.flatten)
+    val badBefore = badFiles()
     reader.start()
+    appender.start()
     try (1 to 2000).foreach(_ => lease = MaintenanceLease.renew(spark, lease))
-    finally { renewing = false; reader.join() }
+    finally { renewing = false; reader.join(); appender.join() }
     assert(misses.get == 0, s"${misses.get} of ${polls.get} polls found no lease")
     assert(polls.get >= 2000, s"the reader polled only ${polls.get} times")
+    assert(otherErrors.isEmpty,
+      s"${otherErrors.size} of ${otherErrors.size + refusals.get} appender " +
+        s"polls did not see the refusal: ${otherErrors.toArray.distinct.take(3).mkString("; ")}")
+    assert(refusals.get > 0, "the appender never polled")
+    assert(badFiles() == badBefore, s"files moved into bad_files: ${badFiles()}")
     MaintenanceLease.release(spark, lease)
     assert(!fs.exists(p))
   }

@@ -23,7 +23,7 @@ class SemanticDedupStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("sem_dedup").toString
     val seed = Seq((1L, v(0)), (2L, v(1))).toDF("vec_id", "embedding")
-    VectorIndexStream.seedIndex(seed, "vec_id", "embedding", s"$dir/index", nLists = 2)
+    VectorIndexStream.seed(seed, "vec_id", "embedding", s"$dir/index", nLists = 2)
 
     val emitted = mutable.ArrayBuffer.empty[Long]
     val in = MemoryStream[(Long, Array[Float])]
@@ -67,7 +67,7 @@ class SemanticDedupStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sem_dedup_bf").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
     val odds = e.filter(col("vec_id") % 2 === 1)
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
 
     val got = SemanticDedupStream.dedupBatch(
         odds, "vec_id", "embedding", s"$dir/index",
@@ -101,7 +101,7 @@ class SemanticDedupStreamSpec extends SparkSpec {
     val idx = s"$dir/index"
     val seed = Seq((1L, v(0)), (2L, v(1)), (3L, v(2)))
       .toDF("vec_id", "embedding")
-    VectorIndexStream.seedIndex(seed, "vec_id", "embedding", idx, nLists = 3)
+    VectorIndexStream.seed(seed, "vec_id", "embedding", idx, nLists = 3)
     // takedown of seed doc 1 lands as delete batch 0
     VectorIndexStream.deleteBatch(
       spark, idx, Seq(1L).toDF("vec_id"), "vec_id", batchId = 0L)

@@ -30,7 +30,7 @@ class StoreLayoutSpec extends SparkSpec {
     val vs = tmp("layout-vs")
     val corpus = (0L until 32L).map(i =>
       (i, Array.fill(4)(((i % 7) + 1).toFloat))).toDF("id", "vec")
-    VectorIndexStream.seedIndex(corpus, "id", "vec", vs, nLists = 2)
+    VectorIndexStream.seed(corpus, "id", "vec", vs, nLists = 2)
     Seq(s"$cm/v=0/meta", s"$hh/v=0/meta", s"$bm/v=0/meta",
         s"$ms/v=0/meta", s"$vs/meta").foreach { p =>
       val meta = spark.read.parquet(p)
@@ -63,12 +63,12 @@ class StoreLayoutSpec extends SparkSpec {
     val vs = tmp("layout-vs-bad")
     val corpus = (0L until 32L).map(i =>
       (i, Array.fill(4)(((i % 7) + 1).toFloat))).toDF("id", "vec")
-    VectorIndexStream.seedIndex(corpus, "id", "vec", vs, nLists = 2)
+    VectorIndexStream.seed(corpus, "id", "vec", vs, nLists = 2)
     Seq(Tuple1(2L)).toDF("nLists")
       .withColumn("layout_version", lit(2L)).coalesce(1)
       .write.mode("overwrite").parquet(s"$vs/meta")
     val e = intercept[IllegalStateException] {
-      VectorIndexStream.topKFromIndex(spark, vs,
+      VectorIndexStream.topK(spark, vs,
         corpus.limit(2), "id", "vec", k = 3)
     }
     assert(e.getMessage.contains("store-layout version 2"), e.getMessage)
@@ -80,7 +80,7 @@ class StoreLayoutSpec extends SparkSpec {
     val path = tmp("layout-sink")
     val corpus = (0L until 32L).map(i =>
       (i, Array.fill(4)(((i % 5) + 1).toFloat))).toDF("id", "vec")
-    graft.sinks.CorpusSink.writeIvfFlatIndex(corpus, "id", "vec", path, nLists = 2)
+    graft.sinks.CorpusSink.writeIvfIndex(corpus, "id", "vec", path, nLists = 2)
     val meta = spark.read.parquet(s"$path/meta")
     assert(meta.columns.contains("layout_version"))
     // doctor to a future generation: the probe must refuse at open
@@ -88,7 +88,7 @@ class StoreLayoutSpec extends SparkSpec {
       .withColumn("layout_version", lit(3L)).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/meta")
     val e = intercept[IllegalStateException] {
-      graft.similarity.Similarity.ivfFlatTopKFromIndex(
+      graft.similarity.Similarity.topKFromIndex(
         spark, path, corpus.limit(2), "id", "vec", k = 3)
     }
     assert(e.getMessage.contains("store-layout version 3"), e.getMessage)
@@ -150,8 +150,8 @@ class StoreLayoutSpec extends SparkSpec {
     val vs = tmp("layout-vs-shim")
     val corpus = (0L until 32L).map(i =>
       (i, Array.fill(4)(((i % 7) + 1).toFloat))).toDF("id", "vec")
-    VectorIndexStream.seedIndex(corpus, "id", "vec", vs, nLists = 2)
-    val native = VectorIndexStream.topKFromIndex(
+    VectorIndexStream.seed(corpus, "id", "vec", vs, nLists = 2)
+    val native = VectorIndexStream.topK(
         spark, vs, corpus.limit(2), "id", "vec", k = 3)
       .collect().map(_.toSeq).toSet
     // doctor the meta to the layout-0 generation (marker column +
@@ -161,7 +161,7 @@ class StoreLayoutSpec extends SparkSpec {
     Seq((2L, 7L)).toDF("nLists", "sketch_seed")
       .withColumn("layout_version", lit(0L)).coalesce(1)
       .write.mode("overwrite").parquet(s"$vs/meta")
-    val shimmed = VectorIndexStream.topKFromIndex(
+    val shimmed = VectorIndexStream.topK(
         spark, vs, corpus.limit(2), "id", "vec", k = 3)
       .collect().map(_.toSeq).toSet
     assert(shimmed == native)
@@ -170,7 +170,7 @@ class StoreLayoutSpec extends SparkSpec {
       .withColumn("layout_version", lit(0L)).coalesce(1)
       .write.mode("overwrite").parquet(s"$vs/meta")
     val e = intercept[IllegalStateException] {
-      VectorIndexStream.topKFromIndex(
+      VectorIndexStream.topK(
         spark, vs, corpus.limit(2), "id", "vec", k = 3)
     }
     assert(e.getMessage.contains("store-layout version 0"), e.getMessage)

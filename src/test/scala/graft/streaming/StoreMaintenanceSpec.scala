@@ -64,11 +64,11 @@ class StoreMaintenanceSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("maint_vec").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 4 === 1), "vec_id", "embedding", idx, 1L)
 
     val clean = StoreMaintenance.planVector(spark, idx, "vec_id", 10L, 10L)

@@ -17,12 +17,12 @@ class StorePointerSpec extends SparkSpec {
     assert(StorePointer.publish(spark, alias, s"$dir/storeB") == 2L)
     // live read cut over; the pin still answers with generation 1
     assert(StorePointer.resolve(spark, alias) == s"$dir/storeB")
-    assert(StorePointer.resolveVersion(spark, alias, 1L) == s"$dir/storeA")
+    assert(StorePointer.resolve(spark, alias, Some(1L)) == s"$dir/storeA")
     assert(StorePointer.history(spark, alias) ==
       Seq(1L -> s"$dir/storeA", 2L -> s"$dir/storeB"))
     // unknown version refuses naming what IS retained
     val unknown = intercept[IllegalStateException] {
-      StorePointer.resolveVersion(spark, alias, 9L)
+      StorePointer.resolve(spark, alias, Some(9L))
     }
     assert(unknown.getMessage.contains("retained: 1, 2"), unknown.getMessage)
 
@@ -42,7 +42,7 @@ class StorePointerSpec extends SparkSpec {
     assert(StorePointer.retirePointers(spark, alias, keepLast = 2) == Seq(1L))
     assert(StorePointer.history(spark, alias).map(_._1) == Seq(2L, 3L))
     intercept[IllegalStateException] {
-      StorePointer.resolveVersion(spark, alias, 1L)
+      StorePointer.resolve(spark, alias, Some(1L))
     }
     intercept[IllegalArgumentException] {
       StorePointer.retirePointers(spark, alias, keepLast = 0)
@@ -77,7 +77,7 @@ class StorePointerSpec extends SparkSpec {
     val alias = s"$dir/alias"
     def seed(name: String, m: Int): String = {
       val idx = s"$dir/$name"
-      VectorIndexStream.seedIndex(
+      VectorIndexStream.seed(
         e.filter(col("vec_id") % 3 === m), "vec_id", "embedding", idx,
         nLists = 8)
       idx
@@ -108,11 +108,12 @@ class StorePointerSpec extends SparkSpec {
     assert(StorePointer.history(spark, alias) == Seq(3L -> c, 4L -> b))
     // both retained generations still serve
     val q = e.filter(col("vec_id") % 100 === 0)
-    assert(VectorIndexStream.topKFromAlias(
-      spark, alias, q, "vec_id", "embedding", k = 1).count() > 0)
-    assert(VectorIndexStream.topKFromAlias(
-      spark, alias, q, "vec_id", "embedding", k = 1,
-      version = Some(3L)).count() > 0)
+    assert(VectorIndexStream.topK(
+      spark, StorePointer.resolve(spark, alias), q, "vec_id", "embedding",
+      k = 1).count() > 0)
+    assert(VectorIndexStream.topK(
+      spark, StorePointer.resolve(spark, alias, Some(3L)), q, "vec_id", "embedding",
+      k = 1).count() > 0)
     // idempotent: nothing left to drop
     assert(StorePointer.retireGenerations(spark, alias, keepLast = 2).isEmpty)
     intercept[IllegalArgumentException] {
@@ -130,7 +131,7 @@ class StorePointerSpec extends SparkSpec {
     val idxA = s"$dir/storeA"
     val idxB = s"$dir/storeB"
     val alias = s"$dir/alias"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idxA,
       nLists = 8)
     StorePointer.publish(spark, alias, idxA)
@@ -138,29 +139,31 @@ class StorePointerSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
       df.orderBy(col("query_id"), col("rank")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val preCutover = rows(VectorIndexStream.topKFromAlias(
-      spark, alias, q, "vec_id", "embedding", k = 3))
+    val preCutover = rows(VectorIndexStream.topK(
+      spark, StorePointer.resolve(spark, alias), q, "vec_id", "embedding", k = 3))
 
     // the cutover: a rebuilt store publishes as v2
-    VectorIndexStream.rebuildIndex(spark, idxA, idxB, "vec_id", "embedding",
+    VectorIndexStream.rebuild(spark, idxA, idxB, "vec_id", "embedding",
       nLists = 8)
     StorePointer.publish(spark, alias, idxB)
 
     // the PINNED v1 read, resolved AFTER the cutover, serves exactly
     // what pre-cutover requests saw — pointer files are immutable
-    val pinned = rows(VectorIndexStream.topKFromAlias(
-      spark, alias, q, "vec_id", "embedding", k = 3, version = Some(1L)))
+    val pinned = rows(VectorIndexStream.topK(
+      spark, StorePointer.resolve(spark, alias, Some(1L)), q, "vec_id", "embedding",
+      k = 3))
     assert(pinned == preCutover)
     // the live read serves the new generation's store
-    val live = rows(VectorIndexStream.topKFromAlias(
-      spark, alias, q, "vec_id", "embedding", k = 3))
-    val direct = rows(VectorIndexStream.topKFromIndex(
+    val live = rows(VectorIndexStream.topK(
+      spark, StorePointer.resolve(spark, alias), q, "vec_id", "embedding", k = 3))
+    val direct = rows(VectorIndexStream.topK(
       spark, idxB, q, "vec_id", "embedding", k = 3))
     assert(live == direct)
     // pinning a never-published generation refuses loudly
     intercept[IllegalStateException] {
-      VectorIndexStream.topKFromAlias(
-        spark, alias, q, "vec_id", "embedding", k = 3, version = Some(9L))
+      VectorIndexStream.topK(
+        spark, StorePointer.resolve(spark, alias, Some(9L)), q, "vec_id", "embedding",
+        k = 3)
     }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, VectorCodec}
 
 class VectorIndexStreamSpec extends SparkSpec {
 
@@ -15,7 +15,7 @@ class VectorIndexStreamSpec extends SparkSpec {
   test("seed-only index answers exactly the inline deterministic IVF (q51's ranking)") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_seed").toString
-    VectorIndexStream.seedIndex(e, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(e, "vec_id", "embedding", s"$dir/index", nLists = 8)
 
     val spark2 = spark
     import spark2.implicits._
@@ -24,7 +24,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
 
-    val served = VectorIndexStream.topKFromIndex(
+    val served = VectorIndexStream.topK(
       spark, s"$dir/index", qLocal, "vec_id", "embedding", k = 3)
     // stored artifacts only, statically pruned to the probed cells
     val plan = served.queryExecution.executedPlan.toString
@@ -41,7 +41,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(topk(served) == inline)
 
     // multi-probe parity too
-    val servedMp = topk(VectorIndexStream.topKFromIndex(
+    val servedMp = topk(VectorIndexStream.topK(
       spark, s"$dir/index", qLocal, "vec_id", "embedding", k = 3, nProbe = 2))
     val inlineMp = topk(Similarity.ivfMultiProbeTopK(
       e, q, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 2))
@@ -57,10 +57,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     // quantizer is fixed at seed time, later appends assign against it
     val trained = Similarity.kmeansCentroids(even, "embedding", nLists = 8)
     assert(trained.count() == 8)
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       even, "vec_id", "embedding", s"$dir/index", nLists = 8,
       centroids = Some(trained))
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", s"$dir/index", 0L)
 
     val stored = spark.read.parquet(s"$dir/index/centroids")
@@ -68,7 +68,7 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     val q = e.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id"), col("embedding"))
-    val served = VectorIndexStream.topKFromIndex(
+    val served = VectorIndexStream.topK(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3)
 
     // inline twin under the SAME stored centroids: the served result
@@ -93,7 +93,7 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // a frame without the centroid contract is rejected loudly
     val e2 = intercept[IllegalArgumentException] {
-      VectorIndexStream.seedIndex(even, "vec_id", "embedding",
+      VectorIndexStream.seed(even, "vec_id", "embedding",
         s"$dir/bad", nLists = 8,
         centroids = Some(even.select(col("vec_id"))))
     }
@@ -107,7 +107,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vec_index_stream").toString
 
     val seedHalf = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(seedHalf, "vec_id", "embedding", s"$dir/index", nLists = 8)
 
     val odd = e.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding")
@@ -115,7 +115,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
 
     val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.indexStreamTo(
+    val q = VectorIndexStream.streamTo(
       in.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
     try {
@@ -131,31 +131,34 @@ class VectorIndexStreamSpec extends SparkSpec {
     // twin: same seed, all streamed rows as ONE backfill batch — batch
     // boundaries must not affect what the index serves
     val twinDir = java.nio.file.Files.createTempDirectory("vec_index_twin").toString
-    VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$twinDir/index", nLists = 8)
-    VectorIndexStream.appendBatch(
-      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twinDir/index", 0L)
+    VectorIndexStream.seed(seedHalf, "vec_id", "embedding", s"$twinDir/index", nLists = 8)
+    VectorIndexStream.append(
+      odd.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      s"$twinDir/index", 0L)
 
-    val full = topk(VectorIndexStream.topKFromIndex(
+    val full = topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
-    val twin = topk(VectorIndexStream.topKFromIndex(
+    val twin = topk(VectorIndexStream.topK(
       spark, s"$twinDir/index", queries, "vec_id", "embedding", k = 3))
     assert(full == twin)
     assert(full.nonEmpty)
 
     // fence: beforeBatch = 0 sees only the seed
     val seedOnlyDir = java.nio.file.Files.createTempDirectory("vec_index_seedonly").toString
-    VectorIndexStream.seedIndex(seedHalf, "vec_id", "embedding", s"$seedOnlyDir/index", nLists = 8)
-    val fenced = topk(VectorIndexStream.topKFromIndex(
-      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3, beforeBatch = 0))
-    val seedOnly = topk(VectorIndexStream.topKFromIndex(
+    VectorIndexStream.seed(seedHalf, "vec_id", "embedding", s"$seedOnlyDir/index",
+        nLists = 8)
+    val fenced = topk(VectorIndexStream.topK(
+      spark, s"$dir/index", queries, "vec_id", "embedding", k = 3,
+      beforeBatch = 0))
+    val seedOnly = topk(VectorIndexStream.topK(
       spark, s"$seedOnlyDir/index", queries, "vec_id", "embedding", k = 3))
     assert(fenced == seedOnly)
     assert(fenced != full) // streamed vectors genuinely changed answers
 
     // replay: re-appending batch 1's rows AS batch 1 overwrites in place
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       b1.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$dir/index", 1L)
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == full)
 
     // compaction folds old batches into the seed without changing what
@@ -168,7 +171,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val batchDirs = new java.io.File(s"$dir/index/cells").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
     assert(batchDirs == Set("batch=-1", "batch=1"), batchDirs.toString)
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == full)
   }
 
@@ -177,15 +180,16 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_sq8").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index",
+        codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", s"$dir/index", 0L)
 
     val qLocal = e.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
-    val served = VectorIndexStream.sq8TopKFromIndex(
+    val served = VectorIndexStream.topK(
       spark, s"$dir/index", qLocal, "vec_id", "embedding", k = 3)
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"), plan)
@@ -224,14 +228,15 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_sq8_stream").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index",
+        codec = VectorCodec.Sq8(), nLists = 8)
 
     val odd = e.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
     val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.sq8IndexStreamTo(
+    val q = VectorIndexStream.streamTo(
       in.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
     try {
@@ -245,14 +250,16 @@ class VectorIndexStreamSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def quad(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val streamed = quad(VectorIndexStream.sq8TopKFromIndex(
+    val streamed = quad(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
 
     val twinDir = java.nio.file.Files.createTempDirectory("vec_index_sq8_twin").toString
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$twinDir/index", nLists = 8)
-    VectorIndexStream.appendSq8Batch(
-      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twinDir/index", 0L)
-    assert(streamed == quad(VectorIndexStream.sq8TopKFromIndex(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$twinDir/index",
+        codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(
+      odd.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      s"$twinDir/index", 0L)
+    assert(streamed == quad(VectorIndexStream.topK(
       spark, s"$twinDir/index", queries, "vec_id", "embedding", k = 3)))
     assert(streamed.nonEmpty)
 
@@ -261,7 +268,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dirs = new java.io.File(s"$dir/index/cells").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("batch=")).toSet
     assert(dirs == Set("batch=-1", "batch=1"), dirs.toString)
-    assert(quad(VectorIndexStream.sq8TopKFromIndex(
+    assert(quad(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == streamed)
   }
 
@@ -271,14 +278,15 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_pq_stream").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$dir/index")
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index",
+        codec = VectorCodec.Pq())
 
     val odd = e.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
     val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.pqIndexStreamTo(
+    val q = VectorIndexStream.streamTo(
       in.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
     try {
@@ -292,7 +300,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def quad(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val served = VectorIndexStream.pqTopKFromIndex(
+    val served = VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("embeddings.parquet"), plan)
@@ -302,18 +310,22 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
 
     val twinDir = java.nio.file.Files.createTempDirectory("vec_index_pq_twin").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$twinDir/index")
-    VectorIndexStream.appendPqBatch(
-      odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twinDir/index", 0L)
-    assert(streamed == quad(VectorIndexStream.pqTopKFromIndex(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$twinDir/index",
+        codec = VectorCodec.Pq())
+    VectorIndexStream.append(
+      odd.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      s"$twinDir/index", 0L)
+    assert(streamed == quad(VectorIndexStream.topK(
       spark, s"$twinDir/index", queries, "vec_id", "embedding", k = 3)))
 
     // fence: pre-stream state == a seed-only store
     val seedOnly = java.nio.file.Files.createTempDirectory("vec_index_pq_seed").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$seedOnly/index")
-    assert(quad(VectorIndexStream.pqTopKFromIndex(
-        spark, s"$dir/index", queries, "vec_id", "embedding", k = 3, beforeBatch = 0))
-      == quad(VectorIndexStream.pqTopKFromIndex(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$seedOnly/index",
+        codec = VectorCodec.Pq())
+    assert(quad(VectorIndexStream.topK(
+        spark, s"$dir/index", queries, "vec_id", "embedding", k = 3,
+      beforeBatch = 0))
+      == quad(VectorIndexStream.topK(
         spark, s"$seedOnly/index", queries, "vec_id", "embedding", k = 3)))
   }
 
@@ -323,8 +335,9 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_refine").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$dir/pq")
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/vecs")
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/pq",
+        codec = VectorCodec.Pq())
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/vecs")
 
     // both stores fed from ONE logical stream in two micro-batches
     val odd = e.filter(col("vec_id") % 2 === 1)
@@ -333,10 +346,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
     val inPq = MemoryStream[(Long, Array[Float])]
     val inFlat = MemoryStream[(Long, Array[Float])]
-    val qPq = VectorIndexStream.pqIndexStreamTo(
+    val qPq = VectorIndexStream.streamTo(
       inPq.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/pq", s"$dir/ckpt_pq")().start()
-    val qFlat = VectorIndexStream.indexStreamTo(
+    val qFlat = VectorIndexStream.streamTo(
       inFlat.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/vecs", s"$dir/ckpt_vecs")().start()
     try {
@@ -365,11 +378,12 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // == the one-batch backfill twin of BOTH stores
     val twin = java.nio.file.Files.createTempDirectory("vec_index_refine_twin").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$twin/pq")
-    VectorIndexStream.appendPqBatch(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$twin/pq",
+        codec = VectorCodec.Pq())
+    VectorIndexStream.append(
       odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twin/pq", 0L)
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$twin/vecs")
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$twin/vecs")
+    VectorIndexStream.append(
       odd.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$twin/vecs", 0L)
     assert(streamed == topk(VectorIndexStream.pqRefinedTopKFromIndex(
       spark, s"$twin/pq", s"$twin/vecs", queries, "vec_id", "embedding",
@@ -387,8 +401,9 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // fence pins BOTH stores: pre-stream == seed-only twins
     val seedOnly = java.nio.file.Files.createTempDirectory("vec_index_refine_seed").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$seedOnly/pq")
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$seedOnly/vecs")
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$seedOnly/pq",
+        codec = VectorCodec.Pq())
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$seedOnly/vecs")
     assert(topk(VectorIndexStream.pqRefinedTopKFromIndex(
         spark, s"$dir/pq", s"$dir/vecs", queries, "vec_id", "embedding",
         k = 3, rerankR = 10, beforeBatch = 0))
@@ -401,17 +416,17 @@ class VectorIndexStreamSpec extends SparkSpec {
     import spark.implicits._
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_journal").toString
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", s"$dir/index", nLists = 8)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 4 === 1), "vec_id", "embedding", s"$dir/index", 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 4 === 3), "vec_id", "embedding", s"$dir/index", 1L)
     val queries = e.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
-    val before = topk(VectorIndexStream.topKFromIndex(
+    val before = topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
 
     // hand-build the worst crash window: staging complete, journal
@@ -430,7 +445,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       "S _compact_seed-t1\nD batch=-1\nD batch=0\n")
 
     val ex = intercept[IllegalStateException] {
-      VectorIndexStream.topKFromIndex(
+      VectorIndexStream.topK(
         spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)
     }
     assert(ex.getMessage.contains("compaction journal"), ex.getMessage)
@@ -440,7 +455,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dirs = cells.listFiles().filter(_.isDirectory).map(_.getName)
       .filter(_.startsWith("batch=")).toSet
     assert(dirs == Set("batch=-1", "batch=1"), dirs.toString)
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == before)
 
     // crash window 2: the swap's rename PROMOTED the staging dir but
@@ -455,7 +470,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dirs2 = cells.listFiles().filter(_.isDirectory).map(_.getName)
       .filter(_.startsWith("batch=")).toSet
     assert(dirs2 == Set("batch=-1", "batch=1"), dirs2.toString)
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == before)
 
     // crash window 3: died MID-JOURNAL-WRITE — only the temp journal
@@ -466,7 +481,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       new java.io.File(cells, "_compact_journal.tmp").toPath,
       "S _compact_seed-torn\nD batch=") // torn mid-line
     new java.io.File(cells, "_compact_seed-torn").mkdir()
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == before)
     VectorIndexStream.compactIndex(spark, s"$dir/index", throughBatch = 0)
     val names3 = cells.listFiles().map(_.getName).toSet
@@ -489,13 +504,15 @@ class VectorIndexStreamSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vec_recall").toString
     val even = e.filter(col("vec_id") % 2 === 0)
     val odd = e.filter(col("vec_id") % 2 === 1)
-    VectorIndexStream.seedIndex(even, "vec_id", "embedding", s"$dir/flat", nLists = 8)
-    VectorIndexStream.appendBatch(odd, "vec_id", "embedding", s"$dir/flat", 0L)
-    VectorIndexStream.seedSq8Index(even, "vec_id", "embedding", s"$dir/sq8", nLists = 8)
-    VectorIndexStream.appendSq8Batch(odd, "vec_id", "embedding", s"$dir/sq8", 0L)
-    VectorIndexStream.seedPqIndex(even, "vec_id", "embedding", s"$dir/pq",
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(odd, "vec_id", "embedding", s"$dir/pq", 0L)
+    VectorIndexStream.seed(even, "vec_id", "embedding", s"$dir/flat", nLists = 8)
+    VectorIndexStream.append(odd, "vec_id", "embedding", s"$dir/flat", 0L)
+    VectorIndexStream.seed(even, "vec_id", "embedding", s"$dir/sq8",
+        codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(odd, "vec_id", "embedding", s"$dir/sq8", 0L)
+    VectorIndexStream.seed(even, "vec_id", "embedding", s"$dir/pq",
+        codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+      nLists = 8)
+    VectorIndexStream.append(odd, "vec_id", "embedding", s"$dir/pq", 0L)
 
     val q = e.filter(col("vec_id") % 50 === 0)
     val exact = sim.bruteForceTopK(e, q, "vec_id", "embedding", k = 3).persist()
@@ -508,11 +525,11 @@ class VectorIndexStreamSpec extends SparkSpec {
       // the SAME stored partitions, recall must not drop — for every
       // payload variant, not just the flat one
       val probes = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
-        "flat" -> (np => VectorIndexStream.topKFromIndex(
+        "flat" -> (np => VectorIndexStream.topK(
           spark, s"$dir/flat", q, "vec_id", "embedding", k = 3, nProbe = np)),
-        "sq8" -> (np => VectorIndexStream.sq8TopKFromIndex(
+        "sq8" -> (np => VectorIndexStream.topK(
           spark, s"$dir/sq8", q, "vec_id", "embedding", k = 3, nProbe = np)),
-        "pq" -> (np => VectorIndexStream.pqTopKFromIndex(
+        "pq" -> (np => VectorIndexStream.topK(
           spark, s"$dir/pq", q, "vec_id", "embedding", k = 3, nProbe = np)))
       probes.foreach { case (name, at) =>
         val r1 = recallOf(at(1)); val r2 = recallOf(at(2)); val r8 = recallOf(at(8))
@@ -539,18 +556,18 @@ class VectorIndexStreamSpec extends SparkSpec {
     // must rank 7777 by the batch-1 vector and emit it at most once —
     // without the resolution it would surface twice, once at rank 1.
     val dir = java.nio.file.Files.createTempDirectory("vec_reuse_flat").toString
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.append(
       Seq((7777L, v)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       Seq((7777L, v.map(x => -x))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", 1L)
     // probe ALL cells so the scan covers both copies (the resolution is
     // per-scan: a stale copy in an UNPROBED cell stays invisible there,
     // the documented Faiss-like limitation — updating a moved vector
     // needs expiry/compaction, not blind re-append)
-    val flat = VectorIndexStream.topKFromIndex(
+    val flat = VectorIndexStream.topK(
         spark, s"$dir/index", qdf, "vec_id", "embedding", k = 1000, nProbe = 8)
       .collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(flat.count(_._2 == 7777L) == 1, flat.mkString(","))
@@ -565,16 +582,17 @@ class VectorIndexStreamSpec extends SparkSpec {
     val d1 = java.nio.file.Files.createTempDirectory("vec_reuse_pq1").toString
     val d2 = java.nio.file.Files.createTempDirectory("vec_reuse_pq2").toString
     for (d <- Seq(d1, d2)) {
-      VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$d/index")
-      VectorIndexStream.appendPqBatch(
+      VectorIndexStream.seed(evens, "vec_id", "embedding", s"$d/index",
+          codec = VectorCodec.Pq())
+      VectorIndexStream.append(
         Seq((7777L, v)).toDF("vec_id", "embedding"),
         "vec_id", "embedding", s"$d/index", 0L)
     }
-    VectorIndexStream.appendPqBatch(
+    VectorIndexStream.append(
       Seq((7777L, v)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$d1/index", 1L)
     def pqDist(d: String): Map[Long, Long] =
-      VectorIndexStream.pqTopKFromIndex(
+      VectorIndexStream.topK(
           spark, s"$d/index", qdf, "vec_id", "embedding", k = 1000)
         .collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
     val (dup, single) = (pqDist(d1), pqDist(d2))
@@ -584,14 +602,15 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // SQ8: rewritten vector serves the latest quantized payload
     val d3 = java.nio.file.Files.createTempDirectory("vec_reuse_sq8").toString
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$d3/index", nLists = 8)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$d3/index",
+        codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(
       Seq((7777L, v)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$d3/index", 0L)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.append(
       Seq((7777L, v.map(x => -x))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$d3/index", 1L)
-    val sq8 = VectorIndexStream.sq8TopKFromIndex(
+    val sq8 = VectorIndexStream.topK(
         spark, s"$d3/index", qdf, "vec_id", "embedding", k = 1000, nProbe = 8)
       .collect().map(r => (r.getLong(2), r.getLong(3)))
     assert(sq8.count(_._1 == 7777L) == 1, sq8.mkString(","))
@@ -602,14 +621,14 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_expire").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedIndex(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
     val odd = e.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
     val (b0, b1) = odd.partition(_._1 % 4 == 1)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       b0.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$dir/index", 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       b1.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$dir/index", 1L)
 
     // drop the seed and batch 0: only batch 1's vectors remain history
@@ -623,7 +642,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
-    val neighbors = VectorIndexStream.topKFromIndex(
+    val neighbors = VectorIndexStream.topK(
         spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(neighbors.subsetOf(remaining))
@@ -653,11 +672,11 @@ class VectorIndexStreamSpec extends SparkSpec {
   test("expireIndexOlderThan: wall-clock cutoff resolves to the batch fence; seed survives; stamps pruned") {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_expire_ts").toString
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 4 === 0), "vec_id", "embedding", s"$dir/index", nLists = 8)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 4 === 1), "vec_id", "embedding", s"$dir/index", 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 4 === 2), "vec_id", "embedding", s"$dir/index", 1L)
     // re-stamp batch 0 three days back (appendBatch stamped it "now")
     val day = 24L * 3600 * 1000
@@ -683,12 +702,12 @@ class VectorIndexStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_fsck").toString
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", s"$dir/index", nLists = 8)
     val odd = e.filter(col("vec_id") % 2 === 1)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
     val in = MemoryStream[(Long, Array[Float])]
-    val q = VectorIndexStream.indexStreamTo(
+    val q = VectorIndexStream.streamTo(
       in.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", s"$dir/ckpt")().start()
     try { in.addData(odd: _*); q.processAllAvailable() } finally q.stop()
@@ -696,7 +715,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val queries = e.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
-    def served(): Set[(Long, Long, Long)] = topk(VectorIndexStream.topKFromIndex(
+    def served(): Set[(Long, Long, Long)] = topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
     val healthy = served()
     assert(VectorIndexStream.verifyIndex(spark, s"$dir/index", s"$dir/ckpt")
@@ -705,7 +724,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     // orphan: a whole shifted copy of the corpus under a batch id the
     // checkpoint never started — every query's own copy now serves at
     // rank 1 (cos = 1), the wrong-neighbors-forever hazard
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.select((col("vec_id") + 100000L).as("vec_id"), col("embedding")),
       "vec_id", "embedding", s"$dir/index", 9L)
     val check = VectorIndexStream.verifyIndex(spark, s"$dir/index", s"$dir/ckpt")
@@ -727,7 +746,8 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_guards").toString
     val evens = e.filter(col("vec_id") % 2 === 0)
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$dir/index",
+        codec = VectorCodec.Sq8(), nLists = 8)
 
     // expiring EVERY partition would brick the store — refused
     val exAll = intercept[IllegalArgumentException] {
@@ -740,7 +760,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     // instead of ranking on a truncated prefix
     val narrow = Seq((1L, Array.fill(32)(0.5f))).toDF("vec_id", "embedding")
     val exW = intercept[Exception] {
-      VectorIndexStream.sq8TopKFromIndex(
+      VectorIndexStream.topK(
         spark, s"$dir/index", narrow, "vec_id", "embedding", k = 3).collect()
     }
     def chain(t: Throwable): List[String] = {
@@ -753,9 +773,10 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // a PQ batch with a duplicated id stores ONE code row for it
     val pqDir = java.nio.file.Files.createTempDirectory("vec_index_pq_dup").toString
-    VectorIndexStream.seedPqIndex(evens, "vec_id", "embedding", s"$pqDir/index")
+    VectorIndexStream.seed(evens, "vec_id", "embedding", s"$pqDir/index",
+        codec = VectorCodec.Pq())
     val v1 = evens.limit(1).select("embedding").as[Array[Float]].collect()(0)
-    VectorIndexStream.appendPqBatch(
+    VectorIndexStream.append(
       Seq((7777L, v1), (7777L, v1.map(x => -x))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$pqDir/index", 0L)
     val stored = VectorIndexStream.readCells(spark, s"$pqDir/index")
@@ -768,26 +789,26 @@ class VectorIndexStreamSpec extends SparkSpec {
     import spark.implicits._
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_edge").toString
-    VectorIndexStream.seedIndex(e, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(e, "vec_id", "embedding", s"$dir/index", nLists = 8)
 
     val queries = e.filter(col("vec_id") % 50 === 0)
       .select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect().toSeq
       .toDF("vec_id", "embedding")
-    val before = topk(VectorIndexStream.topKFromIndex(
+    val before = topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3))
 
     // an empty micro-batch (streams idle between triggers) writes an
     // empty partition that neither breaks partition inference nor
     // changes any answer
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
       "vec_id", "embedding", s"$dir/index", 0L)
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, s"$dir/index", queries, "vec_id", "embedding", k = 3)) == before)
 
     // an empty query batch plans lit(false) instead of an empty IN ()
-    val none = VectorIndexStream.topKFromIndex(
+    val none = VectorIndexStream.topK(
       spark, s"$dir/index",
       Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding"),
       "vec_id", "embedding", k = 3)
@@ -798,15 +819,15 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val q = e.filter(col("vec_id") % 50 === 0)
     val dir = java.nio.file.Files.createTempDirectory("vec_index_del").toString
-    VectorIndexStream.seedIndex(e, "vec_id", "embedding", s"$dir/index", nLists = 8)
+    VectorIndexStream.seed(e, "vec_id", "embedding", s"$dir/index", nLists = 8)
 
     // fresh store: no tombstone dir, empty live set, probe unchanged
     val emptyTs = VectorIndexStream.liveTombstones(spark, s"$dir/index", "vec_id")
     assert(emptyTs.count() == 0)
-    val before = topk(Similarity.ivfFlatTopKFromIndex(
+    val before = topk(Similarity.topKFromIndex(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3,
-      excludeIds = Some(emptyTs)))
-    assert(before == topk(Similarity.ivfFlatTopKFromIndex(
+      filter = VectorCodec.ProbeFilter(excludeIds = Some(emptyTs))))
+    assert(before == topk(Similarity.topKFromIndex(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3)))
 
     // delete every id that appears in the current top-3: each must be
@@ -816,10 +837,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     import spark2.implicits._
     VectorIndexStream.deleteBatch(spark, s"$dir/index",
       hitIds.toDF("vec_id"), "vec_id", batchId = 0L)
-    val after = Similarity.ivfFlatTopKFromIndex(
+    val after = Similarity.topKFromIndex(
       spark, s"$dir/index", q, "vec_id", "embedding", k = 3,
-      excludeIds = Some(
-        VectorIndexStream.liveTombstones(spark, s"$dir/index", "vec_id")))
+      filter = VectorCodec.ProbeFilter(excludeIds = Some(
+        VectorIndexStream.liveTombstones(spark, s"$dir/index", "vec_id"))))
     val afterRows = after.collect()
     val deleted = hitIds.toSet
     assert(afterRows.forall(r => !deleted(r.getLong(2))))
@@ -847,18 +868,18 @@ class VectorIndexStreamSpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 50 === 0)
     val dir = java.nio.file.Files.createTempDirectory("vec_index_purge").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(e, "vec_id", "embedding", idx, nLists = 8)
+    VectorIndexStream.seed(e, "vec_id", "embedding", idx, nLists = 8)
     // batch 0 REUSES an id with a different vector (the latest-wins case)
     val spark2 = spark
     import spark2.implicits._
     val reusedId = 7L
     val newVec = Array.fill(64)(0.5f)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       Seq((reusedId, newVec)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, batchId = 0L)
     // materialize BEFORE purging — the frame is lazy and its input
     // files are about to be rewritten
-    val before = topk(VectorIndexStream.topKFromIndex(
+    val before = topk(VectorIndexStream.topK(
       spark, idx, q, "vec_id", "embedding", k = 3))
     // tombstone ids that are NOT in any current top-3 (removing
     // non-winning candidates provably leaves every top-3 unchanged),
@@ -896,12 +917,12 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(reusedRows(0).getSeq[Float](0).forall(_ == 0.5f))
 
     // serving needs no exclude list and equals the pre-purge ranking
-    val after = topk(VectorIndexStream.topKFromIndex(
+    val after = topk(VectorIndexStream.topK(
       spark, idx, q, "vec_id", "embedding", k = 3))
     assert(after == before)
     // purge with no tombstones is a no-op that doesn't disturb the store
     VectorIndexStream.purgeTombstones(spark, idx, "vec_id")
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, idx, q, "vec_id", "embedding", k = 3)) == before)
   }
 
@@ -911,9 +932,9 @@ class VectorIndexStreamSpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 50 === 0)
     val dead = Seq(11L, 23L, 42L)
     def build(idx: String): Unit = {
-      VectorIndexStream.seedIndex(
+      VectorIndexStream.seed(
         e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-      VectorIndexStream.appendBatch(
+      VectorIndexStream.append(
         e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
       VectorIndexStream.deleteBatch(spark, idx,
         dead.toDF("vec_id"), "vec_id", batchId = 0L)
@@ -922,7 +943,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val a = java.nio.file.Files.createTempDirectory("vec_purge_a").toString + "/index"
     build(a)
     VectorIndexStream.purgeTombstones(spark, a, "vec_id")
-    val expected = topk(VectorIndexStream.topKFromIndex(
+    val expected = topk(VectorIndexStream.topK(
       spark, a, q, "vec_id", "embedding", k = 3))
 
     // store B: identical inputs, crashed at the WORST window — staging
@@ -946,14 +967,14 @@ class VectorIndexStreamSpec extends SparkSpec {
     // reads refuse the journaled store; the next purge call recovers
     // the swap, then completes its OWN fold and drops the tombstones
     intercept[IllegalStateException] {
-      VectorIndexStream.topKFromIndex(
+      VectorIndexStream.topK(
         spark, b, q, "vec_id", "embedding", k = 3)
     }
     VectorIndexStream.purgeTombstones(spark, b, "vec_id")
     val fs = new org.apache.hadoop.fs.Path(b)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$b/_tombstones")))
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, b, q, "vec_id", "embedding", k = 3)) == expected)
 
     // redelivery: the crash window AFTER the swap but BEFORE the
@@ -963,7 +984,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       dead.toDF("vec_id"), "vec_id", batchId = 0L)
     VectorIndexStream.purgeTombstones(spark, a, "vec_id")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$a/_tombstones")))
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, a, q, "vec_id", "embedding", k = 3)) == expected)
   }
 
@@ -976,10 +997,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     // the purge keeps, and the one a crash window that left the
     // re-dated seed beside live tombstones would destroy on re-run
     def build(idx: String): Unit = {
-      VectorIndexStream.seedIndex(e, "vec_id", "embedding", idx, nLists = 8)
+      VectorIndexStream.seed(e, "vec_id", "embedding", idx, nLists = 8)
       VectorIndexStream.deleteBatch(spark, idx,
         Seq(11L, 23L).toDF("vec_id"), "vec_id", batchId = 1L)
-      VectorIndexStream.appendBatch(
+      VectorIndexStream.append(
         Seq((11L, revived)).toDF("vec_id", "embedding"),
         "vec_id", "embedding", idx, batchId = 2L)
     }
@@ -994,7 +1015,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     VectorIndexStream.purgeTombstones(spark, a, "vec_id")
     assert(storedVec(a, 11L).map(_.toSeq) == Seq(revived.toSeq))
     assert(storedVec(a, 23L).isEmpty)
-    val expected = topk(VectorIndexStream.topKFromIndex(
+    val expected = topk(VectorIndexStream.topK(
       spark, a, q, "vec_id", "embedding", k = 3))
 
     // crash window: swap PROMOTED (staging gone), process died before
@@ -1003,7 +1024,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val b = java.nio.file.Files.createTempDirectory("vec_pline_b").toString + "/index"
     build(b)
     VectorIndexStream.purgeTombstones(spark, b, "vec_id")
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, b, q, "vec_id", "embedding", k = 3)) == expected)
     // manufacture the window on the PURGED store: tombstones restored
     // (as if the crash preceded their delete), journal restored with
@@ -1016,7 +1037,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     // reads refuse mid-window; the next maintenance call recovers:
     // journal cleared, tombstones dropped, revived row intact
     intercept[IllegalStateException] {
-      VectorIndexStream.topKFromIndex(
+      VectorIndexStream.topK(
         spark, b, q, "vec_id", "embedding", k = 3)
     }
     VectorIndexStream.purgeTombstones(spark, b, "vec_id")
@@ -1026,7 +1047,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(!fs.exists(
       new org.apache.hadoop.fs.Path(s"$b/cells/_compact_journal")))
     assert(storedVec(b, 11L).map(_.toSeq) == Seq(revived.toSeq))
-    assert(topk(VectorIndexStream.topKFromIndex(
+    assert(topk(VectorIndexStream.topK(
       spark, b, q, "vec_id", "embedding", k = 3)) == expected)
   }
 
@@ -1036,7 +1057,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_late_ts").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(e, "vec_id", "embedding", idx, nLists = 8)
+    VectorIndexStream.seed(e, "vec_id", "embedding", idx, nLists = 8)
     VectorIndexStream.deleteBatch(spark, idx,
       Seq(23L).toDF("vec_id"), "vec_id", batchId = 1L)
     VectorIndexStream.purgeTombstones(spark, idx, "vec_id")
@@ -1086,13 +1107,14 @@ class VectorIndexStreamSpec extends SparkSpec {
     // instead of reporting "no drift" against nothing
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val flat = s"$dir/flat"; val sq8 = s"$dir/sq8"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", flat, nLists = 8)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", flat, 0L)
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seed(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8,
+      codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", sq8, 0L)
     Seq(flat, sq8).foreach { idx =>
       val p = new org.apache.hadoop.fs.Path(s"$idx/cells/batch=-1")
@@ -1115,10 +1137,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     val idx = s"$dir/index"
     def vec(seed: Int) = Array.tabulate(8)(i => ((seed + i) % 5 + 1).toFloat)
     // seed ids 0-15, append ids 16-19 at batch 0
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       (0L until 16L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, nLists = 2)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       (16L until 20L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, batchId = 0L)
     // delete batch 1 tombstones {3 (seed), 17 (batch 0)}
@@ -1126,7 +1148,7 @@ class VectorIndexStreamSpec extends SparkSpec {
       Seq(3L, 17L).toDF("vec_id"), "vec_id", batchId = 1L)
     // batch 2 RE-APPENDS 17 with a new payload: the delete is superseded
     val revived = Array.fill(8)(0.25f)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       Seq((17L, revived)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, batchId = 2L)
 
@@ -1173,7 +1195,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val idx = s"$dir/index"
     val rows = (0L until 6L).map(i =>
       (i, Array.fill(8)((i % 3 + 1).toFloat))).toDF("vec_id", "embedding")
-    VectorIndexStream.seedIndex(rows, "vec_id", "embedding", idx, nLists = 2)
+    VectorIndexStream.seed(rows, "vec_id", "embedding", idx, nLists = 2)
     VectorIndexStream.deleteBatch(spark, idx,
       (0L until 6L).toDF("vec_id"), "vec_id", batchId = 0L)
     // every id dead -> the staged seed would hold no parquet files and
@@ -1205,17 +1227,18 @@ class VectorIndexStreamSpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 50 === 0)
     val dir = java.nio.file.Files.createTempDirectory("vec_index_filtered").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
     val pred = col("label").isin(2, 4, 6)
     val allowedIds = e.filter(pred).select(col("vec_id"))
     val allowed = allowedIds.collect().map(_.getLong(0)).toSet
 
     // every served neighbor satisfies the predicate
-    val served = VectorIndexStream.filteredTopKFromIndex(
-      spark, idx, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2)
+    val served = VectorIndexStream.topK(
+      spark, idx, q, "vec_id", "embedding", k = 3, nProbe = 2,
+      filter = VectorCodec.ProbeFilter(allowedIds = Some(allowedIds)))
     assert(served.collect().forall(r => allowed(r.getLong(2))))
     // the filter does NOT cost the probe its static pruning: the
     // probed-cell literal IN still lands in PartitionFilters
@@ -1224,15 +1247,16 @@ class VectorIndexStreamSpec extends SparkSpec {
       .findFirstIn(plan).isDefined, plan)
     // probing every cell makes the served post-filter EXACT: equal to
     // the inline pre-filter over the same corpus (store holds all ids)
-    val all8 = topk(VectorIndexStream.filteredTopKFromIndex(
-      spark, idx, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 8))
+    val all8 = topk(VectorIndexStream.topK(
+      spark, idx, q, "vec_id", "embedding", k = 3, nProbe = 8,
+      filter = VectorCodec.ProbeFilter(allowedIds = Some(allowedIds))))
     val exact = topk(Similarity.filteredTopK(
       e, q, "vec_id", "embedding", pred, k = 3))
     assert(all8 == exact)
     // fenced at the seed: equal to the inline pre-filter over evens
-    val fenced = topk(VectorIndexStream.filteredTopKFromIndex(
-      spark, idx, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 8,
-      beforeBatch = 0L))
+    val fenced = topk(VectorIndexStream.topK(
+      spark, idx, q, "vec_id", "embedding", k = 3, nProbe = 8,
+      beforeBatch = 0L, filter = VectorCodec.ProbeFilter(allowedIds = Some(allowedIds))))
     val exactSeed = topk(Similarity.filteredTopK(
       e.filter(col("vec_id") % 2 === 0), q, "vec_id", "embedding", pred, k = 3))
     assert(fenced == exactSeed)
@@ -1240,9 +1264,9 @@ class VectorIndexStreamSpec extends SparkSpec {
     // auto-probe: sharp predicate, candidates floor met, all allowed
     val sharpIds = e.filter(col("label") === 4).select(col("vec_id"))
     val sharpAllowed = sharpIds.collect().map(_.getLong(0)).toSet
-    val auto = VectorIndexStream.filteredTopKFromIndex(
-      spark, idx, q, "vec_id", "embedding", sharpIds, k = 3,
-      minCandidates = 20L)
+    val auto = VectorIndexStream.topK(
+      spark, idx, q, "vec_id", "embedding", k = 3,
+      filter = VectorCodec.ProbeFilter(allowedIds = Some(sharpIds), minCandidates = 20L))
     val autoRows = auto.collect()
     assert(autoRows.forall(r => sharpAllowed(r.getLong(2))))
     // every query still gets a full top-3 (the floor guarantees >= 20
@@ -1262,13 +1286,13 @@ class VectorIndexStreamSpec extends SparkSpec {
     val q = e.filter(col("vec_id") % 50 === 0)
     val dir = java.nio.file.Files.createTempDirectory("vec_purge_fsck").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, Array[Float])]
-    val sq = VectorIndexStream.indexStreamTo(
+    val sq = VectorIndexStream.streamTo(
       in.toDF().toDF("vec_id", "embedding"),
       "vec_id", "embedding", idx, s"$dir/ckpt")().start()
     try {
@@ -1287,7 +1311,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(post.committed.isEmpty && post.pending.isEmpty &&
       post.orphans.isEmpty, post.toString)
     assert(VectorIndexStream.quarantineIndexOrphans(spark, idx, s"$dir/ckpt").isEmpty)
-    val served = topk(VectorIndexStream.topKFromIndex(
+    val served = topk(VectorIndexStream.topK(
       spark, idx, q, "vec_id", "embedding", k = 3))
     assert(served.nonEmpty)
     assert(Seq(11L, 23L, 42L).forall(id => !served.exists(_._3 == id)))
@@ -1297,7 +1321,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_index_delstream").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(e, "vec_id", "embedding", idx, nLists = 8)
+    VectorIndexStream.seed(e, "vec_id", "embedding", idx, nLists = 8)
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1338,38 +1362,44 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     val dir = java.nio.file.Files.createTempDirectory("vec_index_qfilt").toString
     val sq8 = s"$dir/sq8"; val pq = s"$dir/pq"
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seed(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8,
+      codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", sq8, 0L)
-    VectorIndexStream.seedPqIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", pq,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(
+      codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+      nLists = 8)
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", pq, 0L)
 
     // allowed = every id, no excludes -> EXACTLY the unfiltered serve
     // (the admission pipeline must be a pure restriction, never a
     // re-ranking), at both nProbe depths
     for (np <- Seq(1, 2)) {
-      assert(top(VectorIndexStream.sq8FilteredTopKFromIndex(
-        spark, sq8, q, "vec_id", "embedding", allIds, k = 3, nProbe = np)) ==
-        top(VectorIndexStream.sq8TopKFromIndex(
+      assert(top(VectorIndexStream.topK(
+        spark, sq8, q, "vec_id", "embedding", k = 3,
+        nProbe = np, filter = VectorCodec.ProbeFilter(allowedIds = Some(allIds)))) ==
+        top(VectorIndexStream.topK(
           spark, sq8, q, "vec_id", "embedding", k = 3, nProbe = np)))
-      assert(top(VectorIndexStream.pqFilteredTopKFromIndex(
-        spark, pq, q, "vec_id", "embedding", allIds, k = 3, nProbe = np)) ==
-        top(VectorIndexStream.pqTopKFromIndex(
+      assert(top(VectorIndexStream.topK(
+        spark, pq, q, "vec_id", "embedding", k = 3,
+        nProbe = np, filter = VectorCodec.ProbeFilter(allowedIds = Some(allIds)))) ==
+        top(VectorIndexStream.topK(
           spark, pq, q, "vec_id", "embedding", k = 3, nProbe = np)))
     }
 
     // predicate respected + the probe keeps its static cell pruning
-    val servedSq8 = VectorIndexStream.sq8FilteredTopKFromIndex(
-      spark, sq8, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2)
+    val servedSq8 = VectorIndexStream.topK(
+      spark, sq8, q, "vec_id", "embedding", k = 3, nProbe = 2,
+      filter = VectorCodec.ProbeFilter(allowedIds = Some(allowedIds)))
     assert(servedSq8.collect().forall(r => allowed(r.getLong(2))))
     assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
       .findFirstIn(servedSq8.queryExecution.executedPlan.toString).isDefined)
-    val servedPq = VectorIndexStream.pqFilteredTopKFromIndex(
-      spark, pq, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2)
+    val servedPq = VectorIndexStream.topK(
+      spark, pq, q, "vec_id", "embedding", k = 3, nProbe = 2,
+      filter = VectorCodec.ProbeFilter(allowedIds = Some(allowedIds)))
     assert(servedPq.collect().forall(r => allowed(r.getLong(2))))
     assert("PartitionFilters: \\[[^\\]]*cell[^\\]]* IN \\(".r
       .findFirstIn(servedPq.queryExecution.executedPlan.toString).isDefined)
@@ -1381,9 +1411,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     import spark2.implicits._
     VectorIndexStream.deleteBatch(spark, sq8,
       Seq(victim).toDF("vec_id"), "vec_id", batchId = 1L)
-    val afterDel = VectorIndexStream.sq8FilteredTopKFromIndex(
-      spark, sq8, q, "vec_id", "embedding", allowedIds, k = 3, nProbe = 2,
-      excludeIds = Some(VectorIndexStream.deadIds(spark, sq8, "vec_id")))
+    val afterDel = VectorIndexStream.topK(
+      spark, sq8, q, "vec_id", "embedding", k = 3, nProbe = 2,
+      filter = VectorCodec.ProbeFilter(allowedIds = Some(allowedIds),
+          excludeIds = Some(VectorIndexStream.deadIds(spark, sq8, "vec_id"))))
     val rows = afterDel.collect()
     assert(rows.forall(_.getLong(2) != victim))
     assert(rows.groupBy(_.getLong(0)).values.forall(_.length == 3))
@@ -1393,13 +1424,15 @@ class VectorIndexStreamSpec extends SparkSpec {
     val sharpIds = e.filter(col("label") === 4).select(col("vec_id"))
     val sharpAllowed = sharpIds.collect().map(_.getLong(0)).toSet
     for (df <- Seq(
-        VectorIndexStream.sq8FilteredTopKFromIndex(
-          spark, sq8, q, "vec_id", "embedding", sharpIds, k = 3,
-          minCandidates = 20L,
-          excludeIds = Some(VectorIndexStream.deadIds(spark, sq8, "vec_id"))),
-        VectorIndexStream.pqFilteredTopKFromIndex(
-          spark, pq, q, "vec_id", "embedding", sharpIds, k = 3,
-          minCandidates = 20L))) {
+        VectorIndexStream.topK(
+          spark, sq8, q, "vec_id", "embedding", k = 3,
+          filter = VectorCodec.ProbeFilter(allowedIds = Some(sharpIds),
+              minCandidates = 20L, excludeIds = Some(VectorIndexStream.deadIds(spark,
+                  sq8, "vec_id")))),
+        VectorIndexStream.topK(
+          spark, pq, q, "vec_id", "embedding", k = 3,
+          filter = VectorCodec.ProbeFilter(allowedIds = Some(sharpIds),
+              minCandidates = 20L)))) {
       val rs = df.collect()
       assert(rs.forall(r => sharpAllowed(r.getLong(2))))
       assert(rs.groupBy(_.getLong(0)).values.forall(_.length == 3))
@@ -1412,10 +1445,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dir = java.nio.file.Files.createTempDirectory("vec_drift").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.append(
       odds.withColumn("embedding", transform(col("embedding"), x => abs(x))),
       "vec_id", "embedding", idx, 1L)
 
@@ -1449,10 +1482,11 @@ class VectorIndexStreamSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dir = java.nio.file.Files.createTempDirectory("vec_clamp").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendSq8Batch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendSq8Batch(
+    VectorIndexStream.seed(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
+      codec = VectorCodec.Sq8(), nLists = 8)
+    VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.append(
       odds.withColumn("embedding", transform(col("embedding"), x => x + x)),
       "vec_id", "embedding", idx, 1L)
     val rows = VectorIndexStream.sq8BoundaryReport(spark, idx).collect()
@@ -1476,10 +1510,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dir = java.nio.file.Files.createTempDirectory("vec_rebuild").toString
     val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendBatch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendBatch(
+    VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.append(
       odds.withColumn("embedding", transform(col("embedding"), x => abs(x))),
       "vec_id", "embedding", idx, 1L)
     VectorIndexStream.deleteBatch(spark, idx,
@@ -1487,9 +1521,9 @@ class VectorIndexStreamSpec extends SparkSpec {
       "vec_id", batchId = 2L)
 
     intercept[IllegalArgumentException] {
-      VectorIndexStream.rebuildIndex(spark, idx, idx, "vec_id", "embedding")
+      VectorIndexStream.rebuild(spark, idx, idx, "vec_id", "embedding")
     }
-    VectorIndexStream.rebuildIndex(spark, idx, idx2, "vec_id", "embedding",
+    VectorIndexStream.rebuild(spark, idx, idx2, "vec_id", "embedding",
       nLists = 8)
     // the rebuilt store holds exactly the live ids: deleted ids gone,
     // each odd id once (its latest, drifted vector)
@@ -1506,9 +1540,9 @@ class VectorIndexStreamSpec extends SparkSpec {
       .unionByName(odds.filter(col("vec_id") % 10 =!= 5)
         .withColumn("embedding", transform(col("embedding"), x => abs(x)))
         .select(col("vec_id"), col("embedding")))
-    VectorIndexStream.seedIndex(live, "vec_id", "embedding", byHand, nLists = 8)
+    VectorIndexStream.seed(live, "vec_id", "embedding", byHand, nLists = 8)
     val q = e.filter(col("vec_id") % 50 === 0)
-    def served(d: String) = VectorIndexStream.topKFromIndex(
+    def served(d: String) = VectorIndexStream.topK(
         spark, d, q, "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(served(idx2) == served(byHand))
@@ -1517,10 +1551,11 @@ class VectorIndexStreamSpec extends SparkSpec {
 
     // a quantized store refuses the rebuild (codes, not vectors)
     val sq8 = s"$dir/sq8"
-    VectorIndexStream.seedSq8Index(
-      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8, nLists = 8)
+    VectorIndexStream.seed(
+      e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", sq8,
+      codec = VectorCodec.Sq8(), nLists = 8)
     val refused = intercept[IllegalStateException] {
-      VectorIndexStream.rebuildIndex(spark, sq8, s"$dir/sq8b", "vec_id", "embedding")
+      VectorIndexStream.rebuild(spark, sq8, s"$dir/sq8b", "vec_id", "embedding")
     }
     assert(refused.getMessage.contains("codes, not vectors"), refused.getMessage)
   }
@@ -1538,9 +1573,10 @@ class VectorIndexStreamSpec extends SparkSpec {
     val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
     // q277's drift fixture + a takedown: grid pinned on evens, odd
     // batch 0 in-range, doubled odd batch 1 escapes the grid
-    VectorIndexStream.seedSq8Index(evens, "vec_id", "embedding", idx, nLists = 8)
-    VectorIndexStream.appendSq8Batch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendSq8Batch(doubledOdds, "vec_id", "embedding", idx, 1L)
+    VectorIndexStream.seed(evens, "vec_id", "embedding", idx, codec = VectorCodec.Sq8(),
+        nLists = 8)
+    VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.append(doubledOdds, "vec_id", "embedding", idx, 1L)
     VectorIndexStream.deleteBatch(spark, idx,
       e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
       "vec_id", batchId = 2L)
@@ -1554,11 +1590,11 @@ class VectorIndexStreamSpec extends SparkSpec {
     val source = evens.select(col("vec_id"), col("embedding"))
       .unionByName(doubledOdds.select(col("vec_id"), col("embedding")))
     intercept[IllegalArgumentException] {
-      VectorIndexStream.rebuildSq8Index(spark, idx, idx, source,
-        "vec_id", "embedding")
+      VectorIndexStream.rebuild(spark, idx, idx,
+        "vec_id", "embedding", codec = VectorCodec.Sq8(), sourceCorpus = Some(source))
     }
-    VectorIndexStream.rebuildSq8Index(spark, idx, idx2, source,
-      "vec_id", "embedding", nLists = 8)
+    VectorIndexStream.rebuild(spark, idx, idx2,
+      "vec_id", "embedding", codec = VectorCodec.Sq8(), nLists = 8, sourceCorpus = Some(source))
 
     // the rebuilt store holds exactly the live ids, once each
     val ids = VectorIndexStream.readCells(spark, idx2)
@@ -1567,16 +1603,16 @@ class VectorIndexStreamSpec extends SparkSpec {
     // serving parity with a by-hand fresh seed over the live corpus
     val live = source.filter(col("vec_id") % 10 =!= 5)
     val byHand = s"$dir/byhand"
-    VectorIndexStream.seedSq8Index(live, "vec_id", "embedding", byHand,
+    VectorIndexStream.seed(live, "vec_id", "embedding", byHand, codec = VectorCodec.Sq8(),
       nLists = 8)
     val q = e.filter(col("vec_id") % 50 === 0)
-    def served(d: String) = VectorIndexStream.sq8TopKFromIndex(
+    def served(d: String) = VectorIndexStream.topK(
         spark, d, q, "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(served(idx2) == served(byHand))
     // the gauge CLEARS: a re-encoded batch of the same drifted
     // distribution reads at the retrained grid's own baseline
-    VectorIndexStream.appendSq8Batch(live, "vec_id", "embedding", idx2, 0L)
+    VectorIndexStream.append(live, "vec_id", "embedding", idx2, 0L)
     val cleared = VectorIndexStream.sq8BoundaryReport(spark, idx2)
       .filter(col("batch") === 0L).collect()
     assert(cleared.length == 1 &&
@@ -1585,8 +1621,9 @@ class VectorIndexStreamSpec extends SparkSpec {
     // a live id missing from the source refuses loudly at execution —
     // the rebuild must never silently drop a vector the store serves
     val ex = intercept[Exception] {
-      VectorIndexStream.rebuildSq8Index(spark, idx, s"$dir/partial",
-        source.filter(col("vec_id") =!= 1L), "vec_id", "embedding")
+      VectorIndexStream.rebuild(spark, idx, s"$dir/partial", "vec_id", "embedding",
+          codec = VectorCodec.Sq8(),
+          sourceCorpus = Some(source.filter(col("vec_id") =!= 1L)))
     }
     def rootMsg(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -1601,7 +1638,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("vec_ts_debris").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx, nLists = 8)
     VectorIndexStream.deleteBatch(
       spark, idx, Seq(2L, 4L).toDF("vec_id"), "vec_id", batchId = 0L)
@@ -1619,7 +1656,7 @@ class VectorIndexStreamSpec extends SparkSpec {
     assert(VectorIndexStream.liveTombstones(spark, idx, "vec_id").count() == 0L)
     assert(StoreMaintenance.planVector(spark, idx, "vec_id", 10L, 10L)
       .tombstoneKeys == 0L)
-    val served = VectorIndexStream.topKFromIndex(spark, idx,
+    val served = VectorIndexStream.topK(spark, idx,
       e.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", k = 1)
     assert(served.count() > 0)
     // and the documented recovery — re-run the purge — retires the
@@ -1636,11 +1673,12 @@ class VectorIndexStreamSpec extends SparkSpec {
     val odds = e.filter(col("vec_id") % 2 === 1)
     val dir = java.nio.file.Files.createTempDirectory("pq_code_drift").toString
     val idx = s"$dir/index"
-    VectorIndexStream.seedPqIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(odds, "vec_id", "embedding", idx, 0L)
-    VectorIndexStream.appendPqBatch(
+      codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+      nLists = 8)
+    VectorIndexStream.append(odds, "vec_id", "embedding", idx, 0L)
+    VectorIndexStream.append(
       odds.withColumn("embedding",
         transform(col("embedding"), _ => lit(0.0f))),
       "vec_id", "embedding", idx, 1L)
@@ -1680,23 +1718,25 @@ class VectorIndexStreamSpec extends SparkSpec {
     val e = graft.Tables.table(spark, sf001, "embeddings")
     val dir = java.nio.file.Files.createTempDirectory("pq_rebuild").toString
     val idx = s"$dir/index"; val idx2 = s"$dir/rebuilt"
-    VectorIndexStream.seedPqIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", idx,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
-    VectorIndexStream.appendPqBatch(
+      codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+      nLists = 8)
+    VectorIndexStream.append(
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", idx, 0L)
     VectorIndexStream.deleteBatch(spark, idx,
       e.filter(col("vec_id") % 10 === 5).select(col("vec_id")),
       "vec_id", batchId = 1L)
-    VectorIndexStream.rebuildPqIndex(spark, idx, idx2,
-      e.select(col("vec_id"), col("embedding")), "vec_id", "embedding",
-      nLists = 8, m = 8, dim = 64, kCent = 16)
+    VectorIndexStream.rebuild(spark, idx, idx2, "vec_id", "embedding",
+        codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+      nLists = 8, sourceCorpus = Some(e.select(col("vec_id"), col("embedding"))))
     val byHand = s"$dir/byhand"
-    VectorIndexStream.seedPqIndex(
+    VectorIndexStream.seed(
       e.filter(col("vec_id") % 10 =!= 5), "vec_id", "embedding", byHand,
-      nLists = 8, m = 8, dim = 64, kCent = 16)
+      codec = VectorCodec.Pq(m = 8, dim = 64, kCent = 16),
+      nLists = 8)
     val q = e.filter(col("vec_id") % 50 === 0)
-    def served(d: String) = VectorIndexStream.pqTopKFromIndex(
+    def served(d: String) = VectorIndexStream.topK(
         spark, d, q, "vec_id", "embedding", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(served(idx2) == served(byHand))
